@@ -656,7 +656,7 @@ def _q_hard_negatives_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("n_candidates").alias("nc"))
         .agg(F.avg("nc").alias("_avg_nc"))
     )
-    return (
+    out = (
         recall.crossJoin(F.broadcast(cost))
         .crossJoin(F.broadcast(n_corp))
         .select(
@@ -669,6 +669,11 @@ def _q_hard_negatives_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+    # the result is one row: compute it, then release the cached frames
+    rows = out.collect()
+    truth.unpersist()
+    approx.unpersist()
+    return spark.createDataFrame(rows, out.schema)
 
 
 def _q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:

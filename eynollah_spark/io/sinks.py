@@ -7,15 +7,35 @@ Iceberg runtime jars, so the same semantics are implemented on plain
 parquet with an explicit manifest directory:
 
     out/
+      manifest/<run-tag>/_layout            (bucket map of the run)
       manifest/<run-tag>/bucket=<k>._done   (commit markers)
       data/_bucket=<k>/part-*.parquet       (hive-partitioned data)
 
 - a bucket is the checkpoint unit: `conv_id`-hash determines the
   bucket, so every conversation lands wholly inside one bucket and a
   restart can never split or duplicate a conversation;
+- a bucket IS a shuffle partition: the bucket of a row is
+  ``pmod(hash(conv_id), n_buckets)``, the partition id Spark's
+  ``hashpartitioning(conv_id, n_buckets)`` computes, and the write is
+  planned with ``spark.sql.shuffle.partitions = n_buckets``. The
+  ordering windows' one ``conv_id`` exchange then has one partition per
+  bucket; AQE coalescing merges only whole partitions, so every bucket
+  lands in one write task and is ONE parquet file (a session that sets
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+  overrides the partition count and gets several files per bucket,
+  with the same rows). Consequently ``n_buckets`` also sets the
+  reducer parallelism of the window and write stage (and of the
+  salted path's salt exchange): choose it no smaller than the
+  executor core count;
 - `resume()` anti-joins the buckets already marked done (the
   "anti-join processed partitions on restart" from SURVEY §2.9/O14)
-  and processes only the remainder;
+  and processes only the remainder. The bucket map and count are
+  recorded in ``_layout`` before the job runs, and a sink whose
+  markers were written under another map or count refuses to resume
+  (``done_buckets`` raises) rather than drop or duplicate
+  conversations. Outputs written before the map became the partition
+  id (``pmod(xxhash64(conv_id), n)``, no ``_layout``) cannot be
+  resumed for that reason;
 - all pending buckets are written in ONE Spark job
   (`partitionBy("_bucket")` + dynamic partition overwrite) — not one
   job per bucket, which at 4096 buckets would be 4096 sequential
@@ -32,15 +52,20 @@ for Iceberg snapshot commits; bucket count scales with cluster size
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+# the bucket map, as recorded in each run's ``_layout``
+_BUCKET_MAP = "pmod(hash(conv_id), n_buckets)"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 
 def _bucket_col(n_buckets: int):
-    # pmod(xxhash64(conv_id)) — deterministic, executor-side, no UDF
-    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+    # Murmur3 (seed 42) pmod n: the partition id of hashpartitioning(conv_id, n)
+    return F.pmod(F.hash("conv_id"), F.lit(n_buckets)).cast("int")
 
 
 class BucketedSpanSink:
@@ -49,15 +74,41 @@ class BucketedSpanSink:
         self.n_buckets = n_buckets
         self.data_dir = os.path.join(root, "data")
         self.manifest_dir = os.path.join(root, "manifest", run_tag)
+        self.layout = {"bucket": _BUCKET_MAP, "n_buckets": n_buckets}
         os.makedirs(self.manifest_dir, exist_ok=True)
 
     # --- manifest ---------------------------------------------------------
     def done_buckets(self) -> set[int]:
+        """Committed buckets. Raises ValueError if there are any but they
+        were committed under another bucket map or count."""
         out = set()
         for name in os.listdir(self.manifest_dir):
             if name.startswith("bucket=") and name.endswith("._done"):
                 out.add(int(name[len("bucket=") : -len("._done")]))
+        if out:
+            self._check_layout()
         return out
+
+    def _check_layout(self):
+        try:
+            with open(os.path.join(self.manifest_dir, "_layout")) as f:
+                have = json.load(f)
+        except FileNotFoundError:
+            have = None
+        if have != self.layout:
+            raise ValueError(
+                f"{self.manifest_dir} holds buckets committed under layout "
+                f"{have or 'not recorded (an older sink)'}, not {self.layout}: "
+                "resume with the same bucket count, or write a new output"
+            )
+
+    def _write_layout(self):
+        # temp file + rename: a reader sees the old record or the new one
+        path = os.path.join(self.manifest_dir, "_layout")
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            json.dump(self.layout, f)
+        os.replace(tmp, path)
 
     def _mark_done(self, bucket: int):
         open(os.path.join(self.manifest_dir, f"bucket={bucket}._done"), "w").close()
@@ -74,7 +125,9 @@ class BucketedSpanSink:
         crash anywhere in the job leaves every pending bucket
         unmarked and the retry rewrites them idempotently. An empty
         pending bucket (no rows hashed into it) is still committed —
-        the successful job vacuously covered its predicate."""
+        the successful job vacuously covered its predicate. The job is
+        planned with one shuffle partition per bucket (module
+        docstring), so each bucket is written as one file."""
         done = self.done_buckets()
         todo = [
             b
@@ -86,12 +139,24 @@ class BucketedSpanSink:
         bucketed = spans.withColumn("_bucket", _bucket_col(self.n_buckets)).filter(
             F.col("_bucket").isin([int(b) for b in todo])
         )
-        (
-            bucketed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(self.data_dir)
-        )
+        self._write_layout()
+        # the conv_id exchange is planned by this action: one partition
+        # per bucket; the session's own value comes back, also on failure
+        conf = spans.sparkSession.conf
+        old = conf.get(_SHUFFLE_PARTITIONS, None)
+        conf.set(_SHUFFLE_PARTITIONS, str(self.n_buckets))
+        try:
+            (
+                bucketed.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("_bucket")
+                .parquet(self.data_dir)
+            )
+        finally:
+            if old is None:
+                conf.unset(_SHUFFLE_PARTITIONS)
+            else:
+                conf.set(_SHUFFLE_PARTITIONS, old)
         for b in todo:
             self._mark_done(b)
         return todo

@@ -549,7 +549,8 @@ def _index_fs(spark, path: str):
 
 def _index_versions(spark, path: str) -> list[int]:
     """Sorted version numbers of ``v=<N>`` snapshot directories under
-    ``path`` (committed or not — commit status is decided by meta/)."""
+    ``path`` (committed or not — commit status is decided by
+    meta/_SUCCESS)."""
     fs, hpath, _ = _index_fs(spark, path)
     if not fs.exists(hpath):
         return []
@@ -598,7 +599,7 @@ def write_dedup_index(
       shingles/ — distinct (doc_id, hb) 60-bit shingle hashes, the
                   exact-Jaccard verification universe
       meta/     — written LAST: version + knobs + per-frame row
-                  counts; its presence IS the commit marker
+                  counts; its _SUCCESS file IS the commit marker
 
     Returns the committed version number.
     """
@@ -659,24 +660,30 @@ def incremental_dedup_indexed(
     parquet scans instead of a full re-shingle.
 
     The snapshot is resolved through its commit marker: the HIGHEST
-    ``v=<N>`` directory whose ``meta/`` exists is the current index
-    (meta is written last, so an uncommitted/torn version is invisible
-    here). Before probing, the recorded per-frame row counts are
-    checked against the frames on disk — a mismatch means the snapshot
-    was tampered with or partially rewritten, and raises rather than
+    ``v=<N>`` directory whose ``meta/_SUCCESS`` exists is the current
+    index (meta is written last and ``_SUCCESS`` only when its job
+    commits, so an uncommitted or torn version is invisible here).
+    Before probing, the recorded per-frame row counts are checked
+    against the frames on disk — a mismatch means the snapshot was
+    tampered with or partially rewritten, and raises rather than
     silently under-flagging duplicates. Knob mismatch raises too (a
     probe with different knobs would silently compare incompatible
     sketches)."""
     spark = new_docs.sparkSession
     fs, _, jvm = _index_fs(spark, index_path)
     vpath = None
+
+    def committed(p: str) -> bool:
+        # Spark creates meta/ when the meta job starts, _SUCCESS when it commits
+        return fs.exists(jvm.org.apache.hadoop.fs.Path(f"{p}/meta/_SUCCESS"))
+
     for v in reversed(_index_versions(spark, index_path)):
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/v={v}/meta")):
+        if committed(f"{index_path}/v={v}"):
             vpath = f"{index_path}/v={v}"
             break
     if vpath is None:
         # pre-versioning flat layout (legacy snapshots): meta/ at top
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta")):
+        if committed(index_path):
             vpath = index_path
         else:
             raise ValueError(

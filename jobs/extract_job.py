@@ -23,7 +23,13 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet/iceberg path")
     ap.add_argument("--output", required=True, help="span sink root")
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument(
+        "--buckets", type=int, default=64,
+        help="sink buckets (commit units, one file each); also the shuffle "
+        "partitions of the window and write stage, so use at least the "
+        "executor core count. --resume needs the value the output was "
+        "written with",
+    )
     ap.add_argument("--salted", action="store_true", help="skew-hardened kernel path")
     ap.add_argument("--salt-buckets", type=int, default=16)
     ap.add_argument("--resume", action="store_true", help="skip committed buckets")

@@ -272,3 +272,33 @@ def test_dedup_index_commit_marker_and_tamper_guard(spark, sf_dir, tmp_path):
     ).parquet(f"{path}/v=1/exact")
     with pytest.raises(ValueError, match="torn or tampered"):
         incremental_dedup_indexed(new, path).collect()
+
+
+def test_dedup_index_torn_meta_is_uncommitted(spark, sf_dir, tmp_path):
+    """A crash DURING the meta write leaves ``v=<N>/meta/`` holding only
+    the job's ``_temporary/`` (Spark creates the directory when the job
+    starts, ``_SUCCESS`` when it commits). That version is uncommitted:
+    probes fall back to the previous one instead of reading a torn
+    meta frame."""
+    import shutil
+
+    from eynollah_spark.operators.dedup import (
+        incremental_dedup_indexed,
+        write_dedup_index,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    index = docs.filter("doc_id % 2 = 0")
+    new = docs.filter("doc_id % 2 = 1").limit(40)
+    path = str(tmp_path / "dedup_index")
+    assert write_dedup_index(index, path) == 1
+    committed = sorted(map(tuple, incremental_dedup_indexed(new, path).collect()))
+
+    assert write_dedup_index(index.limit(10), path) == 2
+    shutil.rmtree(f"{path}/v=2/meta")
+    os.makedirs(f"{path}/v=2/meta/_temporary/0")
+    assert os.path.isdir(f"{path}/v=2/meta")
+    torn = sorted(map(tuple, incremental_dedup_indexed(new, path).collect()))
+    assert torn == committed  # still reads v=1

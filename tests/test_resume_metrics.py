@@ -251,3 +251,99 @@ extract_job.main()
     assert sink.done_buckets() == set(range(8))
     got = _sorted(sink.read(spark).toPandas())
     pd.testing.assert_frame_equal(got, expected)
+
+
+def test_bucket_is_conv_id_hash_partition(spark):
+    """The sink's bucket of a row is the partition Spark's
+    hashpartitioning(conv_id, n) sends it to, so a bucket is one
+    partition of the windows' conv_id exchange."""
+    import pyspark.sql.functions as F
+
+    from eynollah_spark.io.sinks import _bucket_col
+
+    turns = spark.createDataFrame(generate_local(SPEC), schema=TRANSCRIPT_SCHEMA)
+    for n in (7, 64):
+        part = turns.repartition(n, "conv_id").select(
+            _bucket_col(n).alias("bucket"), F.spark_partition_id().alias("pid")
+        )
+        assert part.filter("bucket != pid").count() == 0
+
+
+def _parquet_files(data_dir):
+    import os
+
+    return {
+        d: [f for f in os.listdir(os.path.join(data_dir, d)) if f.endswith(".parquet")]
+        for d in os.listdir(data_dir)
+        if d.startswith("_bucket=")
+    }
+
+
+def test_sink_writes_one_file_per_bucket(spark, tmp_path):
+    """Every committed bucket directory holds one parquet file, even when
+    the session's shuffle partitions differ from the bucket count and
+    AQE does not coalesce (each write task then sees one bucket)."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    assert spark.conf.get("spark.sql.shuffle.partitions") != "16"
+    turns = spark.createDataFrame(generate_local(SPEC), schema=TRANSCRIPT_SCHEMA)
+    sink = BucketedSpanSink(str(tmp_path / "out"), n_buckets=16, run_tag="r1")
+    spark.conf.set(key, "false")
+    try:
+        assert len(sink.write(extract_spans(turns))) == 16
+    finally:
+        spark.conf.set(key, old)
+    files = _parquet_files(sink.data_dir)
+    assert len(files) > 8
+    assert {d: len(f) for d, f in files.items() if len(f) != 1} == {}
+
+
+def test_sink_write_restores_shuffle_partitions(spark, tmp_path):
+    """The write's bucket-sized shuffle partitions are scoped to it: the
+    session's value comes back after a write that commits and after one
+    whose job fails (and then nothing is committed)."""
+    import pyspark.sql.functions as F
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    turns = spark.createDataFrame(generate_local(SPEC), schema=TRANSCRIPT_SCHEMA)
+    spans = extract_spans(turns)
+
+    ok = BucketedSpanSink(str(tmp_path / "ok"), n_buckets=5, run_tag="r1")
+    assert ok.write(spans) == [0, 1, 2, 3, 4]
+    assert spark.conf.get(key) == before
+
+    boom = spans.withColumn(
+        "text",
+        F.when(F.col("span_idx") >= 0, F.raise_error(F.lit("boom"))).otherwise(F.col("text")),
+    )
+    bad = BucketedSpanSink(str(tmp_path / "bad"), n_buckets=5, run_tag="r1")
+    with pytest.raises(Exception, match="boom"):
+        bad.write(boom)
+    assert spark.conf.get(key) == before
+    assert bad.done_buckets() == set()
+
+
+def test_resume_refuses_other_bucket_layout(spark, tmp_path):
+    """Markers committed under another bucket count, or by a sink that
+    recorded no layout (the older xxhash64 map), are refused: resuming
+    them would drop or duplicate conversations."""
+    import os
+
+    turns = spark.createDataFrame(generate_local(SPEC), schema=TRANSCRIPT_SCHEMA)
+    out = str(tmp_path / "out")
+    spans = extract_spans(turns)
+    assert len(BucketedSpanSink(out, n_buckets=8, run_tag="r1").write(spans)) == 8
+
+    assert BucketedSpanSink(out, n_buckets=8, run_tag="r1").done_buckets() == set(range(8))
+    other = BucketedSpanSink(out, n_buckets=4, run_tag="r1")
+    with pytest.raises(ValueError, match="layout"):
+        other.done_buckets()
+    with pytest.raises(ValueError, match="layout"):
+        filter_pending_turns(turns, other)
+
+    os.remove(os.path.join(out, "manifest", "r1", "_layout"))
+    with pytest.raises(ValueError, match="not recorded"):
+        BucketedSpanSink(out, n_buckets=8, run_tag="r1").done_buckets()
+    # a fresh run tag has no markers, so nothing is refused
+    assert BucketedSpanSink(out, n_buckets=4, run_tag="r2").done_buckets() == set()
