@@ -1474,8 +1474,10 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     out = None
+    cached = [truth]
     for name, approx, probes in specs:
         approx = approx.persist()
+        cached.append(approx)
         recall = (
             truth.join(
                 approx.select("query_id", "vec_id", F.lit(1).alias("_hit")),
@@ -1512,7 +1514,12 @@ def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         out = r if out is None else out.unionByName(r)
-    return out
+    # three rows: collect them, release every cached frame, and return
+    # the rows as a frame — a lazy result would keep the caches alive
+    rows = out.collect()
+    for df in cached:
+        df.unpersist()
+    return spark.createDataFrame(rows, out.schema)
 
 
 def _q_extract_spans_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

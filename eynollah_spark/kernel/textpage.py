@@ -2,11 +2,13 @@
 
 This is what Spark executes inside ``mapInPandas``: per Arrow batch,
 all character-level work (line classification, binarization, ink
-profiles) is done with pandas/numpy vectorized string ops across the
-*flattened line array of the whole batch*; only the cheap per-page
-region assembly (a state machine over a few dozen line labels) runs as
-Python, mirroring how the reference iterates over per-page contour
-lists after vectorized numpy/OpenCV passes.
+profiles) is done with Arrow/numpy vectorized ops across the
+*flattened line array of the whole batch*. Page assembly (SPEC §§1-5)
+runs as segmented numpy with per-page resets, and SPEC §§6-11 run in
+one array engine: batched gutter/deskew grids, the column split, and
+``_emit_core`` for reading order, merges and emission. Spans and page
+diagnostics both come out of that engine; ``oracle/reference.py`` is
+the independent per-page implementation it is tested against.
 
 Reference parity (all citations into /root/reference/qurator/eynollah):
 - two-model classification + binarized-retry gate: eynollah.py:1148-1379
@@ -195,7 +197,7 @@ class LineModel:
 # utf8_trim_whitespace uses the Unicode White_Space property, which
 # differs on \x1c-\x1f etc.).
 _PY_WHITESPACE = "".join(chr(c) for c in range(0x3001) if chr(c).isspace())
-# boolean LUT over the same range for grid-side .strip() parity
+# boolean LUT over the same range for code-point-side .strip() parity
 # (0x3000 IDEOGRAPHIC SPACE is Unicode's highest whitespace codepoint,
 # so clamping larger codepoints to index 0 — NUL, not whitespace — is
 # exact); used by the batched column-span trim in _emit_cols
@@ -231,23 +233,6 @@ def _flatten_lines_arrow(texts: pd.Series):
     base = np.repeat(global_start[turn_first[nonzero]], n_per[nonzero])
     line_start = global_start - base
     return lines_pa, turn_ord, line_start, n_per, lens
-
-
-def _flatten_lines(texts: pd.Series):
-    """Back-compat pandas wrapper around the Arrow flattener."""
-    lines_pa, turn_ord, line_start, n_per, _ = _flatten_lines_arrow(texts)
-    lines = pd.Series(lines_pa.to_numpy(zero_copy_only=False), dtype="object")
-    return lines, turn_ord, line_start, n_per
-
-
-SPAN_COLUMNS = [
-    "span_idx",
-    "region_type",
-    "region_seq",
-    "char_start",
-    "char_end",
-    "text",
-]
 
 
 def _wrap_line(ln: str, width: int) -> list:
@@ -319,7 +304,7 @@ def analyze_turns_frames(
     pdf: pd.DataFrame, model: LineModel | None = None
 ) -> list[pd.DataFrame]:
     """Iterator-friendly twin of ``analyze_turns_batch``: returns the
-    fast-path and slow-path frames as a LIST (0-2 entries) instead of
+    column-free and column-page frames as a LIST (0-2 entries) instead of
     concatenating them — mapInPandas yields each directly, skipping
     the pandas block consolidation that concat forces. Row order
     across the frames is NOT part of the contract (extract.py imposes
@@ -416,8 +401,6 @@ def _analyze_batch(
     # (border trim, fence toggles, agreement gate, band splits, region
     # runs) runs once over the flattened batch with per-page resets,
     # and Python touches only per-REGION lists (~spans/3 items).
-    span_rows = []
-    diag_rows = []
     P = len(pdf)
     n = len(lines_pa)
     offsets = np.zeros(P + 1, dtype=np.int64)
@@ -581,456 +564,103 @@ def _analyze_batch(
     else:
         reg_label = np.zeros(0, dtype=np.int8)
 
-    # ---- span-mode fast path: pages needing no column splits (the
-    # large majority) emit entirely as numpy arrays — the §8
-    # drop-capital merge and §9 fragment adherence are handled
-    # array-natively in _emit_fast; only pages with actual gutter
-    # splits (incl. deskewed ones) fall back to the per-page path
-    # below. Tool pages are fast by construction (one pseudo-region of
-    # all nonblank lines).
-    fast_df = None
-    if not want_diag and n and not cfg.enable_line_split:
-        r_page = page[starts]
-        r_label = reg_label
-        complex_page = np.zeros(P, dtype=bool)
-        # §6/§6d pre-check only where the page is otherwise simple;
-        # the full (shifts, sheared_profile, gutters) triple is cached
-        # so the per-page path never recomputes. A skewed block whose
-        # shear finds NO gutters emits exactly as unsheared (SPEC §6d),
-        # so it stays on the fast path — only real column structure
-        # routes a page to the per-page walk.
-        # note: dropcap/fragment pages (already complex) are NOT
-        # excluded — caching their blocks here means the per-page
-        # path never recomputes the gutter/deskew machinery
-        gutter_cache: dict[int, tuple] = {}
-        if len(starts):
-            eligible = np.flatnonzero(
-                (r_label == C_TEXT)
-                & (counts >= cfg.min_block_lines)
-                & ~tool_page[r_page]
-            )
-        else:
-            eligible = np.zeros(0, dtype=np.int64)
-        if len(eligible):
-            st_e = starts[eligible].astype(np.int64)
-            cn_e = counts[eligible].astype(np.int64)
-            # segment reductions over [start, start+count) pairs; the
-            # sentinel pad keeps end == n a legal reduceat index
-            idx2 = np.empty(2 * len(st_e), dtype=np.int64)
-            idx2[0::2] = st_e
-            idx2[1::2] = st_e + cn_e
-            sent = np.zeros(1, dtype=np.int64)
-            wb = np.maximum.reduceat(np.concatenate([raw_len, sent]), idx2)[0::2]
-            # vectorized LS-slope gate (SPEC §6d): A/B per block
-            sy = np.add.reduceat(np.concatenate([lstr_len, sent]), idx2)[0::2]
-            gidx = np.arange(n, dtype=np.int64) * lstr_len
-            sgy = np.add.reduceat(np.concatenate([gidx, sent]), idx2)[0::2]
-            sky = sgy - st_e * sy
-            sk = cn_e * (cn_e - 1) // 2
-            sk2 = (cn_e - 1) * cn_e * (2 * cn_e - 1) // 6
-            A_e = cn_e * sky - sk * sy
-            B_e = cn_e * sk2 - sk * sk
-            skewed = (B_e > 0) & (np.abs(A_e) >= cfg.slope_threshold * B_e)
-            # recompute oversized blocks' gate with Python's arbitrary-
-            # precision ints — same arithmetic as the per-page path and
-            # the oracle. Two wrap routes: B_e ~ cn^4/12 (cn bound) and
-            # A_e <= ~1.5*cn^2*sum(leads) (pathological indents); the
-            # float test is conservative with 3x headroom under 2^63
-            unsafe = (
-                cn_e.astype(np.float64) ** 2 * sy.astype(np.float64)
-            ) > 3.0e18
-            oversize = np.flatnonzero((cn_e > _LS_GATE_MAX_LINES) | unsafe)
-            exact_ab: dict[int, tuple] = {}
-            for j in oversize:
-                st_j, cn_j = int(st_e[j]), int(cn_e[j])
-                A, B = _ls_slope_int(
-                    [int(v) for v in lstr_len[st_j : st_j + cn_j]]
-                )
-                skewed[j] = B > 0 and abs(A) >= cfg.slope_threshold * B
-                exact_ab[int(j)] = (A, B)  # int64 A_e/B_e may have wrapped
-
-            # batched profiles: ALL narrow blocks (straight and
-            # skewed) share ONE UTF-32 grid per chunk instead of
-            # per-block numpy dispatch; straight blocks run the
-            # grid-vectorized valley machinery, skewed blocks feed
-            # their chunk ink rows straight into the shear grid
-            WCAP = 192
-            gridable = np.flatnonzero((wb > 0) & (wb <= WCAP))
-            pos = 0
-            while pos < len(gridable):
-                take = []
-                tot = 0
-                while pos < len(gridable) and tot < 16384:
-                    j = int(gridable[pos])
-                    take.append(j)
-                    tot += int(cn_e[j])
-                    pos += 1
-                sel = np.asarray(take, dtype=np.int64)
-                st_s = st_e[sel]
-                cn_s = cn_e[sel]
-                reg_first = np.cumsum(cn_s) - cn_s
-                li = np.repeat(st_s - reg_first, cn_s) + np.arange(
-                    int(cn_s.sum()), dtype=np.int64
-                )
-                grid = (
-                    lines_np[li]
-                    .astype(f"U{WCAP}")
-                    .view(np.uint32)
-                    .reshape(len(li), WCAP)
-                )
-                lens_li = raw_len[li]
-                ink = (grid != 32) & (
-                    np.arange(WCAP, dtype=np.int64)[None, :] < lens_li[:, None]
-                )
-                # per-block column sums via ONE bincount over the ink
-                # coordinates (touches only the ~3% inked cells, vs a
-                # full-grid cumsum); the same coordinate arrays feed
-                # the shear grid for skewed blocks below
-                nsk = ~skewed[sel]
-                rows_nz, cols_nz = np.nonzero(ink)
-                blk_of_row = np.repeat(
-                    np.arange(len(take), dtype=np.int64), cn_s
-                )
-                blk_nz = blk_of_row[rows_nz]
-                prof_all = np.bincount(
-                    blk_nz * WCAP + cols_nz, minlength=len(take) * WCAP
-                ).reshape(len(take), WCAP)
-                # batched valley machinery: quick reject, run
-                # extraction, smoothing and prominence all run as grid
-                # ops over the whole chunk (bit-identical per row to
-                # the scalar _select_gutters — A/B-fuzzed)
-                gl = _select_gutters_batch(prof_all[nsk], wb[sel][nsk], cfg)
-                gi = 0
-                pend = []  # sheared blocks: (j, st, shifts, sh_prof)
-                skew_jj = []
-                for jj, j in enumerate(take):
-                    if not skewed[j]:
-                        g = gl[gi]
-                        gi += 1
-                        gutter_cache[int(st_e[j])] = (None, None, g)
-                        if g:
-                            complex_page[r_page[eligible[j]]] = True
-                    else:
-                        skew_jj.append(jj)
-                if skew_jj:
-                    # the whole chunk's shear grids in one batch; ink
-                    # coordinates come from the shared bincount pass
-                    specs = []
-                    for jj in skew_jj:
-                        j = take[jj]
-                        rf = int(reg_first[jj])
-                        n_ = int(cn_s[jj])
-                        st = int(st_e[j])
-                        lo = np.searchsorted(blk_nz, jj)
-                        hi = np.searchsorted(blk_nz, jj + 1)
-                        ab = exact_ab.get(int(j))
-                        if ab is None:
-                            ab = (int(A_e[j]), int(B_e[j]))
-                        specs.append(
-                            (
-                                ab[0],
-                                ab[1],
-                                lens_li[rf : rf + n_],
-                                rows_nz[lo:hi] - rf,
-                                cols_nz[lo:hi],
-                            )
-                        )
-                    for jj, res in zip(
-                        skew_jj, _choose_shear_batch(specs, cfg)
-                    ):
-                        j = take[jj]
-                        st = int(st_e[j])
-                        if res is not None:
-                            # sheared-profile gutters batch below
-                            pend.append((j, st, res[1], res[2]))
-                            continue
-                        n_ = int(cn_s[jj])
-                        g = _find_gutters(
-                            lines_np, raw_len, range(st, st + n_), cfg
-                        )
-                        gutter_cache[st] = (None, None, g)
-                        if g:
-                            complex_page[r_page[eligible[j]]] = True
-                if pend:
-                    wmaxp = max(len(p[3]) for p in pend)
-                    pgrid = np.zeros((len(pend), wmaxp), dtype=np.int64)
-                    for r, (_j, _st, _sh, pr) in enumerate(pend):
-                        pgrid[r, : len(pr)] = pr
-                    gls = _select_gutters_batch(
-                        pgrid, [len(p[3]) for p in pend], cfg
-                    )
-                    for r, (j, st, sh, pr) in enumerate(pend):
-                        g = gls[r]
-                        gutter_cache[st] = (sh, pr, g)
-                        if g:
-                            complex_page[r_page[eligible[j]]] = True
-
-            # wide blocks (> WCAP): per-block path (shear grid / grid
-            # fallback)
-            rest = np.flatnonzero(wb > WCAP)
-            for j in rest:
-                n_ = int(cn_e[j])
-                st = int(st_e[j])
-                shifts = None
-                sh_prof = None
-                if skewed[j]:
-                    lens_r = raw_len[st : st + n_]
-                    wblk = int(wb[j])
-                    if wblk > 0:
-                        blk = lines_np[st : st + n_]
-                        grid = blk.astype(f"U{wblk}").view(np.uint32).reshape(n_, wblk)
-                        valid = (
-                            np.arange(wblk, dtype=np.int64)[None, :]
-                            < lens_r[:, None]
-                        )
-                        ink = (grid != 32) & valid
-                        res = _choose_shear(
-                            ink, lens_r, lstr_len[st : st + n_], cfg
-                        )
-                        if res is not None:
-                            _s_star, shifts, sh_prof = res
-                if shifts is not None:
-                    g = _select_gutters(sh_prof, cfg)
-                else:
-                    g = _find_gutters(lines_np, raw_len, range(st, st + n_), cfg)
-                gutter_cache[st] = (shifts, sh_prof, g)
-                if g:
-                    complex_page[r_page[eligible[j]]] = True
-        simple_page = ~complex_page
-        # fast region table: real regions on simple non-tool pages +
-        # one pseudo-region per non-empty tool page
-        if len(starts):
-            rmask = simple_page[r_page] & ~tool_page[r_page]
-            fr_start = starts[rmask]
-            fr_count = counts[rmask]
-            fr_label = r_label[rmask]
-            fr_band = band[starts][rmask]
-            fr_page = r_page[rmask]
-        else:
-            fr_start = fr_count = fr_label = fr_band = fr_page = np.zeros(0, np.int64)
-        tp = np.flatnonzero(tool_page & (n_per > 0))
-        if len(tp):
-            fr_start = np.concatenate([fr_start, firsts[tp]])
-            fr_count = np.concatenate([fr_count, n_per[tp]])
-            fr_label = np.concatenate([fr_label, np.full(len(tp), C_TOOL, np.int8)])
-            fr_band = np.concatenate([fr_band, np.zeros(len(tp), np.int64)])
-            fr_page = np.concatenate([fr_page, tp])
-        if len(fr_start):
-            fast_df = _emit_fast(
-                fr_start, fr_count, fr_label, fr_band, fr_page,
+    # ---- §§6-10, one array engine: every text block gets its §6/§6d
+    # gutters in batched grids (_block_gutters). Pages without column
+    # structure — and tool pages, one pseudo-region of all nonblank
+    # lines — emit through _emit_fast; column pages (block gutters or
+    # §6p page columns) through _emit_cols; both finish in _emit_core.
+    parts = []
+    page_cols: dict[int, tuple] = {}
+    r_page = page[starts]
+    gutter_cache = _block_gutters(
+        starts, counts, reg_label, r_page, tool_page,
+        lines_np, raw_len, lstr_len, cfg,
+    )
+    complex_page = np.zeros(P, dtype=bool)
+    complex_page[page[np.fromiter(gutter_cache, np.int64, len(gutter_cache))]] = True
+    rmask = ~complex_page[r_page] & ~tool_page[r_page]
+    tp = np.flatnonzero(tool_page & (n_per > 0))
+    fr_start = np.concatenate([starts[rmask], firsts[tp]])
+    if len(fr_start):
+        parts.append(
+            _emit_fast(
+                fr_start,
+                np.concatenate([counts[rmask], n_per[tp]]),
+                np.concatenate([reg_label[rmask], np.full(len(tp), C_TOOL, np.int8)]),
+                np.concatenate([band[starts][rmask], np.zeros(len(tp), np.int64)]),
+                np.concatenate([r_page[rmask], tp]),
                 pdf, stripped_np, line_start + lstr_len, s_len, lstr_len, cfg,
             )
-        # §6p batched page-union profiles: every complex page with
-        # >= 2 text blocks detects page columns over the UNION ink
-        # profile of its text-block lines (SPEC §6p). Batching the
-        # profiles into per-chunk coordinate bincounts + the grid
-        # valley machinery removes the per-page U-grid build and
-        # scalar _select_gutters call from the slow-path walk (the
-        # two dominated _emit_page time once blocks were batched).
-        # Pages wider than _PG_WCAP keep the per-page fallback.
-        page_gutter_cache: dict[int, list] = {}
-        cplx = complex_page & ~tool_page
-        if cplx.any() and len(starts):
-            txt_r = np.flatnonzero((r_label == C_TEXT) & cplx[r_page])
-            ntb = np.bincount(r_page[txt_r], minlength=P)
-            elig_r = txt_r[ntb[r_page[txt_r]] >= 2]
-            if len(elig_r):
-                st_r = starts[elig_r].astype(np.int64)
-                cn_r = counts[elig_r].astype(np.int64)
-                pg_of_r = r_page[elig_r]
-                # per-page max text-line width via segment reductions
-                idx2p = np.empty(2 * len(st_r), dtype=np.int64)
-                idx2p[0::2] = st_r
-                idx2p[1::2] = st_r + cn_r
-                sentp = np.zeros(1, dtype=np.int64)
-                wreg = np.maximum.reduceat(
-                    np.concatenate([raw_len, sentp]), idx2p
-                )[0::2]
-                pw = np.zeros(P, dtype=np.int64)
-                np.maximum.at(pw, pg_of_r, wreg)
-                _PG_WCAP = 512
-                keep = (pw[pg_of_r] > 0) & (pw[pg_of_r] <= _PG_WCAP)
-                st_r, cn_r, pg_of_r = st_r[keep], cn_r[keep], pg_of_r[keep]
-                # group regions by page (pages are contiguous after
-                # this stable sort), then chunk pages by line volume
-                order = np.argsort(pg_of_r, kind="stable")
-                st_r, cn_r, pg_of_r = st_r[order], cn_r[order], pg_of_r[order]
-                upage, ufirst = np.unique(pg_of_r, return_index=True)
-                ulast = np.append(ufirst[1:], len(pg_of_r))
-                pos = 0
-                while pos < len(upage):
-                    take_end = pos
-                    tot = 0
-                    while take_end < len(upage) and tot < 16384:
-                        tot += int(
-                            cn_r[ufirst[take_end] : ulast[take_end]].sum()
-                        )
-                        take_end += 1
-                    rsel = slice(ufirst[pos], ulast[take_end - 1])
-                    st_s, cn_s = st_r[rsel], cn_r[rsel]
-                    pg_s = pg_of_r[rsel]
-                    reg_first = np.cumsum(cn_s) - cn_s
-                    li = np.repeat(st_s - reg_first, cn_s) + np.arange(
-                        int(cn_s.sum()), dtype=np.int64
-                    )
-                    W = int(pw[upage[pos:take_end]].max())
-                    grid = (
-                        lines_np[li]
-                        .astype(f"U{W}")
-                        .view(np.uint32)
-                        .reshape(len(li), W)
-                    )
-                    lens_li = raw_len[li]
-                    ink = (grid != 32) & (
-                        np.arange(W, dtype=np.int64)[None, :]
-                        < lens_li[:, None]
-                    )
-                    # page slot per line row of this chunk
-                    pslot = np.repeat(
-                        np.searchsorted(upage[pos:take_end], pg_s), cn_s
-                    )
-                    rows_nz, cols_nz = np.nonzero(ink)
-                    nchunk = take_end - pos
-                    prof = np.bincount(
-                        pslot[rows_nz] * W + cols_nz, minlength=nchunk * W
-                    ).reshape(nchunk, W)
-                    gl = _select_gutters_batch(
-                        prof, pw[upage[pos:take_end]], cfg
-                    )
-                    for s, p in enumerate(upage[pos:take_end]):
-                        # (page text width, gutters): the width bounds
-                        # the final column segment in _emit_page
-                        page_gutter_cache[int(offsets[p])] = (
-                            int(pw[p]),
-                            gl[s],
-                        )
-                    pos = take_end
-        # --- widened fast path: complex pages WITHOUT page-gutter mode
-        # (~96% of them) emit batch-vectorized via _emit_cols; only
-        # pages where §6p page-column mode can fire (>= 2 text blocks
-        # with a cached non-empty page gutter, or an uncached wide
-        # page) keep the per-page walk ---------------------------------
-        cols_df = None
-        cplx_pages = np.flatnonzero(complex_page & ~tool_page)
-        if _EMIT_COLS and len(cplx_pages):
-            if len(starts):
-                ntext_page = np.bincount(
-                    r_page[r_label == C_TEXT], minlength=P
-                )
-            else:
-                ntext_page = np.zeros(P, dtype=np.int64)
-            take_cols = []
-            fallback = []
-            for t in cplx_pages:
-                if ntext_page[t] >= 2:
-                    ent = page_gutter_cache.get(int(offsets[t]))
-                    if ent is None or ent[1]:
-                        fallback.append(int(t))
-                        continue
-                take_cols.append(int(t))
-            if take_cols:
-                cols_df = _emit_cols(
-                    take_cols, r_lo, r_hi, starts, counts, r_label,
-                    band, r_page, lines_np, stripped_np, line_start,
-                    lstr_len, s_len, raw_len, gutter_cache, pdf, cfg,
-                )
-            pages_iter = np.asarray(fallback, dtype=np.int64)
-        else:
-            pages_iter = cplx_pages
-    else:
-        gutter_cache = {}
-        page_gutter_cache = {}
-        cols_df = None
-        pages_iter = np.arange(P)
-
-    for t in pages_iter:
-        if tool_page[t]:
-            spans = []
-            for i in range(offsets[t], offsets[t + 1]):
-                if s_len[i] > 0:
-                    cs = int(line_start[i] + lstr_len[i])
-                    spans.append(
-                        (len(spans), RT_TOOL, 0, cs, cs + int(s_len[i]), stripped_np[i])
-                    )
-            if want_diag:
-                diag_rows.append(
-                    (int(n_per[t]), len(spans), 1 if spans else 0, 1, 0.0, False, 100.0, False, False)
-                )
-            else:
-                for row in spans:
-                    span_rows.append((t,) + row)
-            continue
-        regions = [
-            [
-                _CODE_RT[reg_label[r]],
-                int(band[starts[r]]),
-                int(starts[r]),
-                0,
-                range(int(starts[r]), int(starts[r] + counts[r])),
-            ]
-            for r in range(r_lo[t], r_hi[t])
-        ]
-        res = _emit_page(
-            regions,
-            int(n_per[t]),
-            float(ratio[t]),
-            bool(used_b[t]),
-            lines_np,
-            stripped_np,
-            line_start,
-            lstr_len,
-            s_len,
-            raw_len,
-            cfg,
-            want_diag,
-            gutter_cache,
-            page_ctx=(int(offsets[t]), cls, active),
-            page_gutter_cache=page_gutter_cache,
         )
-        if want_diag:
-            diag_rows.append(res + (bool(was_enh[t]),))
-        else:
-            for row in res:
-                span_rows.append((t,) + row)
+    cplx = np.flatnonzero(complex_page)
+    if len(cplx):
+        page_cols = _page_gutters(
+            complex_page, starts, counts, reg_label, r_page, lines_np, raw_len, cfg
+        )
+        # §6p band recompute: on a page-column page a separator whose
+        # ink sits inside ONE column (mother/child containment,
+        # utils/__init__.py:213-297) no longer advances the band
+        # counter for the later lines of its page
+        if page_cols:
+            sep = np.flatnonzero(active & (cls == C_SEP))
+            sep = sep[np.isin(page[sep], np.fromiter(page_cols, np.int64, len(page_cols)))]
+            for i in sep.tolist():
+                ends = page_cols[int(page[i])][2]
+                a = lstr_len[i]
+                if np.searchsorted(ends, a) == np.searchsorted(ends, a + s_len[i] - 1):
+                    band[i + 1 : offsets[page[i] + 1]] -= 1
+        parts.append(
+            _emit_cols(
+                cplx, r_lo, r_hi, starts, counts, reg_label, band,
+                lines_np, stripped_np, line_start, lstr_len, s_len, raw_len,
+                gutter_cache, page_cols, pdf, cfg,
+            )
+        )
+    parts = [p for p in parts if p is not None]
 
     if want_diag:
-        out = pd.DataFrame(
-            diag_rows,
-            columns=[
-                "n_lines",
-                "n_spans",
-                "n_regions",
-                "max_columns",
-                "slope",
-                "is_deskewed",
-                "agreement_ratio",
-                "used_binarized",
-                "was_enhanced",
-            ],
+        # SPEC §11 from the engine's own arrays: span/region counts of
+        # the emitted spans, columns from the gutter caches, slope over
+        # the un-guttered text-block lines
+        n_spans = np.zeros(P, dtype=np.int64)
+        n_regions = np.zeros(P, dtype=np.int64)
+        for sp_page, f in parts:
+            n_spans += np.bincount(sp_page, minlength=P)
+            np.maximum.at(n_regions, sp_page, f["region_seq"].to_numpy() + 1)
+        max_cols = np.ones(P, dtype=np.int64)
+        for st, (_sh, _pr, g) in gutter_cache.items():
+            max_cols[page[st]] = max(max_cols[page[st]], len(g) + 1)
+        for p, (_w, g, _e) in page_cols.items():
+            max_cols[p] = len(g) + 1
+        plain_txt = (
+            (reg_label == C_TEXT)
+            & ~tool_page[r_page]
+            & ~np.isin(starts, np.fromiter(gutter_cache, np.int64, len(gutter_cache)))
+            & ~np.isin(r_page, np.fromiter(page_cols, np.int64, len(page_cols)))
         )
-        out.insert(0, "conv_id", pdf["conv_id"].to_numpy())
-        out.insert(1, "turn_idx", pdf["turn_idx"].to_numpy())
-        return out
-
-    # columnar construction: zip-transpose + typed arrays skips
-    # pandas' slow mixed-type row conversion path
-    if span_rows:
-        tt, sidx, rtyp, rseq, cs, ce, txt = zip(*span_rows)
-        ti = np.asarray(tt, dtype=np.int64)
-        out = pd.DataFrame(
+        slope = _page_slopes(
+            P, starts[plain_txt], counts[plain_txt], r_page[plain_txt], lstr_len
+        )
+        return pd.DataFrame(
             {
-                "conv_id": pdf["conv_id"].to_numpy()[ti],
-                "turn_idx": pdf["turn_idx"].to_numpy()[ti],
-                "span_idx": np.asarray(sidx, dtype=np.int64),
-                "region_type": np.asarray(rtyp, dtype=object),
-                "region_seq": np.asarray(rseq, dtype=np.int64),
-                "char_start": np.asarray(cs, dtype=np.int64),
-                "char_end": np.asarray(ce, dtype=np.int64),
-                "text": np.asarray(txt, dtype=object),
+                "conv_id": pdf["conv_id"].to_numpy(),
+                "turn_idx": pdf["turn_idx"].to_numpy(),
+                "n_lines": n_per,
+                "n_spans": n_spans,
+                "n_regions": n_regions,
+                "max_columns": max_cols,
+                "slope": slope,
+                "is_deskewed": np.abs(slope) >= cfg.slope_threshold,
+                "agreement_ratio": ratio,
+                "used_binarized": used_b & ~tool_page,
+                "was_enhanced": was_enh,
             }
         )
-    else:
-        out = pd.DataFrame(
+    frames = [f for _p, f in parts]
+    if as_frames:
+        return frames
+    if not frames:
+        return pd.DataFrame(
             {
                 "conv_id": pd.Series([], dtype="object"),
                 "turn_idx": pd.Series([], dtype="int64"),
@@ -1042,29 +672,244 @@ def _analyze_batch(
                 "text": pd.Series([], dtype="object"),
             }
         )
-    if as_frames:
-        frames = []
-        if fast_df is not None and len(fast_df):
-            frames.append(fast_df)
-        if cols_df is not None and len(cols_df):
-            frames.append(cols_df)
-        if len(out):
-            frames.append(out)
-        return frames
-    done = [
-        f
-        for f in (fast_df, cols_df, out)
-        if f is not None and len(f)
-    ]
-    if not done:
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+
+# cells (rows x widest line) per chunk of blocks or pages: bounds the
+# profile grids and the batched valley/shear machinery over them,
+# instead of capping line width
+_GRID_CELLS = 1 << 22
+
+
+def _cell_chunks(widths, rows):
+    """Consecutive [lo, hi) ranges over items whose grid — total rows
+    x widest item so far — stays within _GRID_CELLS; an item over the
+    budget on its own forms a range of one."""
+    out = []
+    lo = 0
+    n = len(widths)
+    while lo < n:
+        # every item has >= 1 row, so a range never exceeds budget items
+        end = min(n, lo + _GRID_CELLS + 1)
+        cost = np.cumsum(rows[lo:end]) * np.maximum.accumulate(widths[lo:end])
+        hi = lo + max(1, int(np.searchsorted(cost, _GRID_CELLS, side="right")))
+        out.append((lo, hi))
+        lo = hi
+    return out
+
+
+def _char_cells(lines, lens, keep):
+    """(row, col) of every character of ``lines`` whose UTF-32 code
+    passes ``keep``, rows ascending. Read from ONE UTF-32 buffer of the
+    lines, so the cost follows their characters, not rows x widest
+    line."""
+    codes = np.frombuffer("".join(lines).encode("utf-32-le"), dtype=np.uint32)
+    pos = np.flatnonzero(keep(codes))
+    ends = np.cumsum(lens)
+    rows = np.searchsorted(ends, pos, side="right")
+    return rows, pos - (ends - lens)[rows]
+
+
+def _is_ink(codes):
+    """char != ' ' — a NUL is ink, as in the oracle"""
+    return codes != 32
+
+
+def _is_text(codes):
+    """not whitespace by Python's str.strip() (_WS_LUT)"""
+    return ~_WS_LUT[np.where(codes <= 0x3000, codes, 0)]
+
+
+def _block_gutters(
+    starts, counts, reg_label, r_page, tool_page, lines_np, raw_len, lstr_len, cfg
+):
+    """SPEC §6/§6d for every text block of >= min_block_lines lines on
+    a non-tool page: the LS-slope gate, the shear-grid deskew of skewed
+    blocks, and the valley gutters of the sheared (deskew found a
+    slope) or raw ink profile. Blocks run width-sorted in chunks cut at
+    power-of-two widths and by _cell_chunks, each chunk's ink cells
+    feeding ONE profile bincount, ONE _choose_shear_batch and the grid
+    valley machinery.
+    Returns {first_line: (shifts, sheared_profile, gutters)} for the
+    blocks WITH gutters (shifts/profile None when unsheared)."""
+    out: dict[int, tuple] = {}
+    eligible = np.flatnonzero(
+        (reg_label == C_TEXT)
+        & (counts >= cfg.min_block_lines)
+        & ~tool_page[r_page]
+    )
+    if not len(eligible):
         return out
-    return done[0] if len(done) == 1 else pd.concat(done, ignore_index=True)
+    n = len(raw_len)
+    st_e = starts[eligible].astype(np.int64)
+    cn_e = counts[eligible].astype(np.int64)
+    # segment reductions over [start, start+count) pairs; the sentinel
+    # pad keeps end == n a legal reduceat index
+    idx2 = np.empty(2 * len(st_e), dtype=np.int64)
+    idx2[0::2] = st_e
+    idx2[1::2] = st_e + cn_e
+    sent = np.zeros(1, dtype=np.int64)
+    wb = np.maximum.reduceat(np.concatenate([raw_len, sent]), idx2)[0::2]
+    # vectorized LS-slope gate (SPEC §6d): A/B per block
+    sy = np.add.reduceat(np.concatenate([lstr_len, sent]), idx2)[0::2]
+    gidx = np.arange(n, dtype=np.int64) * lstr_len
+    sgy = np.add.reduceat(np.concatenate([gidx, sent]), idx2)[0::2]
+    sky = sgy - st_e * sy
+    sk = cn_e * (cn_e - 1) // 2
+    sk2 = (cn_e - 1) * cn_e * (2 * cn_e - 1) // 6
+    A_e = cn_e * sky - sk * sy
+    B_e = cn_e * sk2 - sk * sk
+    skewed = (B_e > 0) & (np.abs(A_e) >= cfg.slope_threshold * B_e)
+    # recompute oversized blocks' gate with Python's arbitrary-precision
+    # ints — the oracle's arithmetic. Two wrap routes: B_e ~ cn^4/12
+    # (cn bound) and A_e <= ~1.5*cn^2*sum(leads) (pathological
+    # indents); the float test is conservative with 3x headroom
+    unsafe = (cn_e.astype(np.float64) ** 2 * sy.astype(np.float64)) > 3.0e18
+    exact_ab: dict[int, tuple] = {}
+    for j in np.flatnonzero((cn_e > _LS_GATE_MAX_LINES) | unsafe).tolist():
+        st_j, cn_j = int(st_e[j]), int(cn_e[j])
+        A, B = _ls_slope_int([int(v) for v in lstr_len[st_j : st_j + cn_j]])
+        skewed[j] = B > 0 and abs(A) >= cfg.slope_threshold * B
+        exact_ab[j] = (A, B)  # int64 A_e/B_e may have wrapped
+
+    order = np.flatnonzero(wb > 0)
+    order = order[np.argsort(wb[order], kind="stable")]
+    # power-of-two width classes keep each chunk's row padding under 2x
+    wcls = np.frexp(wb[order].astype(np.float64))[1]
+    parts = np.split(order, np.flatnonzero(np.diff(wcls)) + 1)
+    for sel in (p[lo:hi] for p in parts for lo, hi in _cell_chunks(wb[p], cn_e[p])):
+        m = len(sel)
+        st_s = st_e[sel]
+        cn_s = cn_e[sel]
+        wb_s = wb[sel]
+        W = int(wb_s.max())
+        reg_first = np.cumsum(cn_s) - cn_s
+        li = np.repeat(st_s - reg_first, cn_s) + np.arange(
+            int(cn_s.sum()), dtype=np.int64
+        )
+        lens_li = raw_len[li]
+        rows_nz, cols_nz = _char_cells(lines_np[li], lens_li, _is_ink)
+        # per-block column sums via ONE bincount over the ink
+        # coordinates; the same coordinates feed the shear grid
+        blk_nz = np.repeat(np.arange(m, dtype=np.int64), cn_s)[rows_nz]
+        prof = np.bincount(blk_nz * W + cols_nz, minlength=m * W).reshape(m, W)
+        plain = ~skewed[sel]
+        sk_jj = np.flatnonzero(~plain)
+        if len(sk_jj):
+            nz_lo = np.searchsorted(blk_nz, sk_jj)
+            nz_hi = np.searchsorted(blk_nz, sk_jj + 1)
+            specs = []
+            for jj, a, b in zip(sk_jj.tolist(), nz_lo.tolist(), nz_hi.tolist()):
+                j = int(sel[jj])
+                rf = int(reg_first[jj])
+                ab = exact_ab.get(j)
+                if ab is None:
+                    ab = (int(A_e[j]), int(B_e[j]))
+                specs.append(
+                    (ab[0], ab[1], lens_li[rf : rf + int(cn_s[jj])],
+                     rows_nz[a:b] - rf, cols_nz[a:b])
+                )
+            sheared = []
+            for jj, res in zip(sk_jj.tolist(), _choose_shear_batch(specs, cfg)):
+                if res is None:
+                    plain[jj] = True  # no shear: the raw profile (SPEC §6d)
+                else:
+                    sheared.append((jj, res[1], res[2]))
+            if sheared:
+                pgrid = np.zeros((len(sheared), max(len(s[2]) for s in sheared)), np.int64)
+                for r, (_jj, _sh, pr) in enumerate(sheared):
+                    pgrid[r, : len(pr)] = pr
+                gls = _select_gutters_batch(pgrid, [len(s[2]) for s in sheared], cfg)
+                for (jj, sh, pr), g in zip(sheared, gls):
+                    if g:
+                        out[int(st_s[jj])] = (sh, pr, g)
+        pl = np.flatnonzero(plain)
+        for jj, g in zip(pl.tolist(), _select_gutters_batch(prof[pl], wb_s[pl], cfg)):
+            if g:
+                out[int(st_s[jj])] = (None, None, g)
+    return out
 
 
-# A/B switch for the batched column-page emission (_emit_cols): tests
-# force it off to drive every complex page through the per-page
-# _emit_page walk and assert bit-identical output
-_EMIT_COLS = True
+def _page_gutters(
+    complex_page, starts, counts, reg_label, r_page, lines_np, raw_len, cfg
+):
+    """SPEC §6p: a column page with >= 2 text blocks detects page
+    columns over the UNION ink profile of all its text-block lines.
+    Pages run width-sorted in _cell_chunks, one page-slot bincount and
+    one _select_gutters_batch per chunk. Returns
+    {page: (page_width, gutters, gutter_ends)} for the pages whose
+    union profile has gutters — the page-column mode pages."""
+    out: dict[int, tuple] = {}
+    txt = np.flatnonzero((reg_label == C_TEXT) & complex_page[r_page])
+    ntb = np.bincount(r_page[txt], minlength=len(complex_page))
+    txt = txt[ntb[r_page[txt]] >= 2]
+    if not len(txt):
+        return out
+    st_r = starts[txt].astype(np.int64)
+    cn_r = counts[txt].astype(np.int64)
+    pg_r = r_page[txt]  # ascending: regions follow line order
+    idx2 = np.empty(2 * len(st_r), dtype=np.int64)
+    idx2[0::2] = st_r
+    idx2[1::2] = st_r + cn_r
+    wreg = np.maximum.reduceat(
+        np.concatenate([raw_len, np.zeros(1, np.int64)]), idx2
+    )[0::2]
+    upage, ufirst = np.unique(pg_r, return_index=True)
+    pw = np.maximum.reduceat(wreg, ufirst)
+    order = np.argsort(pw, kind="stable")
+    for lo, hi in _cell_chunks(pw[order], np.add.reduceat(cn_r, ufirst)[order]):
+        slot_pages = np.sort(upage[order[lo:hi]])
+        keep = np.isin(pg_r, slot_pages)
+        st_s, cn_s = st_r[keep], cn_r[keep]
+        reg_first = np.cumsum(cn_s) - cn_s
+        li = np.repeat(st_s - reg_first, cn_s) + np.arange(
+            int(cn_s.sum()), dtype=np.int64
+        )
+        rows_nz, cols_nz = _char_cells(lines_np[li], raw_len[li], _is_ink)
+        pslot = np.repeat(np.searchsorted(slot_pages, pg_r[keep]), cn_s)
+        pw_s = pw[np.searchsorted(upage, slot_pages)]
+        W = int(pw_s.max())
+        prof = np.bincount(
+            pslot[rows_nz] * W + cols_nz, minlength=len(slot_pages) * W
+        ).reshape(len(slot_pages), W)
+        for p, w, g in zip(
+            slot_pages.tolist(), pw_s.tolist(), _select_gutters_batch(prof, pw_s, cfg)
+        ):
+            if g:
+                out[p] = (w, g, np.asarray([g1 for _g0, g1 in g], dtype=np.int64))
+    return out
+
+
+def _page_slopes(P, st, cn, pg, lead):
+    """SPEC §11 deskew slope per page: least-squares fit of leading
+    indent against in-block line index over the given text blocks
+    (cv2.fitLine analog, utils/__init__.py:331-332). Means come from
+    exact integer sums and every elementwise term is vectorized; the
+    two float sums stay one numpy reduction per page, so each value is
+    bit-identical to np.sum over that page's own arrays (pairwise
+    summation order)."""
+    slope = np.zeros(P, dtype=np.float64)
+    tot = int(cn.sum())
+    if tot < 2:
+        return slope
+    first = np.cumsum(cn) - cn
+    li = np.repeat(st - first, cn) + np.arange(tot, dtype=np.int64)
+    xs = (np.arange(tot, dtype=np.int64) - np.repeat(first, cn)).astype(np.float64)
+    ys = lead[li].astype(np.float64)
+    lpage = np.repeat(pg, cn)  # ascending: blocks follow line order
+    n_pg = np.bincount(lpage, minlength=P)
+    den = np.maximum(n_pg, 1)
+    dx = xs - (np.bincount(lpage, xs, P) / den)[lpage]
+    dd = dx * dx
+    dxy = dx * (ys - (np.bincount(lpage, ys, P) / den)[lpage])
+    hi = np.cumsum(n_pg)
+    lo = hi - n_pg
+    for p in np.flatnonzero(n_pg >= 2).tolist():
+        var = float(dd[lo[p] : hi[p]].sum())
+        if var > 0:
+            slope[p] = float(dxy[lo[p] : hi[p]].sum()) / var
+    return slope
+
 
 # reading-order type group per line class (SPEC §7)
 _TG_LUT = np.full(16, 9, dtype=np.int8)
@@ -1078,18 +923,19 @@ _TG_LUT[C_SEP] = 3
 
 
 def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
-    """Shared array engine for SPEC §§8,9,10 over ORDERED regions and
-    their span arrays: the §8 drop-capital merge and the §9
-    overlap-argmax fragment adherence run as array patches, span-less
-    regions vanish, regions and spans number per page, span fields
-    gather into the output frame — numpy throughout except the (rare)
-    per-merge patch loops.
+    """Shared array engine for SPEC §§8,9L,9,10 over ORDERED regions
+    and their span arrays: the §8 drop-capital merge, the gated §9L
+    line split and the §9 overlap-argmax fragment adherence run as
+    array patches, span-less regions vanish, regions and spans number
+    per page, span fields gather into the output frame — numpy
+    throughout except the (rare) per-merge/per-split patch loops.
 
     Per-region (in final reading order): lb (class codes), pg (page
     ids, ascending), bd (bands). Per-span (grouped by region, ascending
     rl, reading order within region): cs/ce/texts/spn_len plus the §9
     column range cola/colb (profile coordinates). All span arrays must
-    be writable copies — §8/§9 patch them in place."""
+    be writable copies — §8/§9 patch them in place. Returns (page id
+    per span, span frame), or None when no span survives."""
     R = len(lb)
     if len(rl) == 0:
         return None
@@ -1102,7 +948,7 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
     dc_idx = np.flatnonzero(lb == C_DROPCAP)
     for i in dc_idx:
         if kept_per_region[i] == 0:
-            continue  # span-less dropcap: absent from the page walk
+            continue  # span-less dropcap: no region to merge
         j = i + 1
         while j < R and kept_per_region[j] == 0:
             j += 1
@@ -1137,14 +983,60 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
             cs[pos] = dcs
             spn_len[pos] += dlen
 
+    # §9L curved-line splitting (gated; -cl analog): long TEXT spans
+    # subdivide at the smoothed valleys of their own ink profile. A
+    # region whose pieces would all be fragments keeps its spans whole
+    # and skips §9 (there is no big span to adhere to).
+    sfl = cfg.small_fragment_max_len
+    whole = np.zeros(R, dtype=bool)
+    if cfg.enable_line_split:
+        cuts = {}
+        for x in np.flatnonzero(
+            (spn_len >= cfg.line_split_min_len) & (lb[rl] == C_TEXT)
+        ).tolist():
+            p = _line_split_pieces(texts[x], cfg)
+            if p is not None:
+                cuts[x] = p
+        if cuts:
+            big = spn_len > sfl
+            for x, p in cuts.items():
+                big[x] = any(b - a > sfl for a, b in p)
+            whole[np.unique(rl[list(cuts)])] = True
+            whole[rl[big]] = False
+            cuts = {x: p for x, p in cuts.items() if not whole[rl[x]]}
+        if cuts:
+            reps = np.ones(len(rl), dtype=np.int64)
+            for x, p in cuts.items():
+                reps[x] = len(p)
+            src = np.repeat(np.arange(len(rl), dtype=np.int64), reps)
+            first = np.cumsum(reps) - reps
+            pa = np.zeros(len(src), dtype=np.int64)
+            pb = spn_len[src].copy()
+            cut = np.zeros(len(src), dtype=bool)
+            new_texts = texts[src]
+            for x, p in cuts.items():
+                f = int(first[x])
+                for k, (a, b) in enumerate(p):
+                    pa[f + k] = a
+                    pb[f + k] = b
+                    new_texts[f + k] = texts[x][a:b]
+                cut[f : f + len(p)] = True
+            ce = np.where(cut, cs[src] + pb, ce[src])
+            cs = cs[src] + pa
+            colb = np.where(cut, cola[src] + pb, colb[src])
+            cola = cola[src] + pa
+            spn_len = pb - pa
+            rl = rl[src]
+            texts = new_texts
+
     # §9 overlap-argmax fragment adherence (SPEC §9), as a patch over
     # the span arrays: fragments in TEXT regions merge into the big
     # span with maximal column overlap (ties: index-nearest, then
     # earliest); fragment spans are then excluded before numbering.
     # The merged dropcap span keeps the TARGET's column range (cola/
-    # colb are never patched), matching the per-page walk.
+    # colb are never patched), as the oracle does.
     drop_span = np.zeros(len(rl), dtype=bool)
-    frag_mask = (spn_len <= cfg.small_fragment_max_len) & (lb[rl] == C_TEXT)
+    frag_mask = (spn_len <= sfl) & (lb[rl] == C_TEXT) & ~whole[rl]
     if frag_mask.any():
         uregs = np.unique(rl[frag_mask])
         ua0 = np.searchsorted(rl, uregs)
@@ -1154,7 +1046,7 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
             sl = spn_len[a0:a1]
             fa = cola[a0:a1]
             fe = colb[a0:a1]
-            is_frag = sl <= cfg.small_fragment_max_len
+            is_frag = sl <= sfl
             bigs = [x for x in range(k) if not is_frag[x]]
             if not bigs:
                 continue  # fragment-only region keeps its spans
@@ -1208,10 +1100,9 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
     rt_lut = np.empty(16, dtype=object)
     for code, rt in _CODE_RT.items():
         rt_lut[code] = rt
-    rt_lut[C_DROPCAP] = RT_DROPCAP  # unmerged dropcaps keep the spec type
     conv_vals = pdf["conv_id"].to_numpy()
     turn_vals = pdf["turn_idx"].to_numpy()
-    return pd.DataFrame(
+    return span_page, pd.DataFrame(
         {
             "conv_id": conv_vals[span_page],
             "turn_idx": turn_vals[span_page],
@@ -1261,51 +1152,59 @@ def _emit_fast(
 
 
 def _emit_cols(
-    pages, r_lo, r_hi, starts, counts, r_label, band, r_page,
+    pages, r_lo, r_hi, starts, counts, r_label, band,
     lines_np, stripped_np, line_start, lstr_len, s_len, raw_len,
-    gutter_cache, pdf, cfg,
+    gutter_cache, page_cols, pdf, cfg,
 ):
-    """Array-native span emission for COLUMN pages without page-gutter
-    mode (SPEC §6 column split + §6m marginalia + §§7-10) — the
-    widened fast path: ~96% of complex pages are block-gutter-only and
-    previously walked ``_emit_page`` one page at a time.
+    """Array-native span emission for COLUMN pages (SPEC §6 column
+    split, §6p page columns, §6m marginalia, §§7-10).
 
-    Guttered text regions expand into per-column sub-regions; the
-    column piece trim runs as ONE batched searchsorted over the
-    chunk-gridded non-whitespace coordinates (exact ``str.strip()``
-    parity via _WS_LUT) instead of per-piece slice+lstrip+rstrip;
-    plain regions reuse the line-span arrays; everything merges into
-    one region table ordered by (page, band, type-group, first, col)
-    and finishes in the shared ``_emit_core`` engine. Bit-identical to
-    the per-page walk (A/B-fuzzed in tests/test_kernel_oracle.py)."""
+    On a §6p page-column page (``page_cols``) every text region splits
+    by the page gutters at the page width, every other region takes
+    the column holding its first line's first ink, and regions order
+    column-major across bands; elsewhere a text region splits by its
+    own block gutters. Guttered text regions expand into per-column
+    sub-regions; the column piece trim runs as ONE batched searchsorted
+    over the lines' non-whitespace coordinates (exact ``str.strip()``
+    parity via _WS_LUT); plain regions reuse the
+    line-span arrays; everything merges into one region table ordered
+    by (page, band, type-group, first, col) — (page, col, band,
+    type-group, first) on page-column pages — and finishes in the
+    shared ``_emit_core`` engine."""
     K = 1 + int(raw_len.max()) if len(raw_len) else 1
 
     # --- region tables: plain regions (one row) vs guttered text ---
     rg_lab, rg_bd, rg_first, rg_col, rg_pg = [], [], [], [], []
     a_start, a_count = [], []  # plain regions, parallel to their rows
     gregs = []  # (start, count, shifts, gutters, w, band, page)
-    for t in pages:
+    for t in pages.tolist():
+        pc_ = page_cols.get(t)
         for r in range(r_lo[t], r_hi[t]):
             st_r = int(starts[r])
             cn_r = int(counts[r])
             lab = int(r_label[r])
             bd_r = int(band[st_r])
-            ent = gutter_cache.get(st_r) if lab == C_TEXT else None
-            if ent is not None and ent[2]:
-                shifts, sh_prof, gutters = ent
+            col = 0
+            if pc_ is not None:
+                if lab == C_TEXT:
+                    gregs.append((st_r, cn_r, None, pc_[1], pc_[0], bd_r, t))
+                    continue
+                col = int(np.searchsorted(pc_[2], lstr_len[st_r]))
+            elif lab == C_TEXT and st_r in gutter_cache:
+                shifts, sh_prof, gutters = gutter_cache[st_r]
                 if shifts is not None:
                     w = len(sh_prof)
                 else:
                     w = int(raw_len[st_r : st_r + cn_r].max())
-                gregs.append((st_r, cn_r, shifts, gutters, w, bd_r, int(t)))
-            else:
-                rg_lab.append(lab)
-                rg_bd.append(bd_r)
-                rg_first.append(st_r)
-                rg_col.append(0)
-                rg_pg.append(int(t))
-                a_start.append(st_r)
-                a_count.append(cn_r)
+                gregs.append((st_r, cn_r, shifts, gutters, w, bd_r, t))
+                continue
+            rg_lab.append(lab)
+            rg_bd.append(bd_r)
+            rg_first.append(st_r)
+            rg_col.append(col)
+            rg_pg.append(t)
+            a_start.append(st_r)
+            a_count.append(cn_r)
 
     # --- guttered regions: batched column piece extraction ---------------
     pair_meta = []  # per (region, col): (greg_ord, col, a, b)
@@ -1322,31 +1221,9 @@ def _emit_cols(
             if shifts is not None:
                 off = int(g_lineoff[go])
                 shift_flat[off : off + cn_r] = np.asarray(shifts, dtype=np.int64)
-        # chunked non-whitespace coordinates (line-major => sorted keys)
-        key_chunks = []
-        pos = 0
-        while pos < Lg:
-            end = min(pos + 16384, Lg)
-            sel = li_g[pos:end]
-            Wc = int(raw_len[sel].max()) if end > pos else 0
-            if Wc > 0:
-                grid = (
-                    lines_np[sel]
-                    .astype(f"U{Wc}")
-                    .view(np.uint32)
-                    .reshape(end - pos, Wc)
-                )
-                valid = (
-                    np.arange(Wc, dtype=np.int64)[None, :]
-                    < raw_len[sel][:, None]
-                )
-                nonws = valid & ~_WS_LUT[np.where(grid <= 0x3000, grid, 0)]
-                rows_nz, cols_nz = np.nonzero(nonws)
-                key_chunks.append((rows_nz + pos) * K + cols_nz)
-            pos = end
-        flat_keys = (
-            np.concatenate(key_chunks) if key_chunks else np.zeros(0, np.int64)
-        )
+        # non-whitespace coordinates (line-major => sorted keys)
+        rows_nw, cols_nw = _char_cells(lines_np[li_g], raw_len[li_g], _is_text)
+        flat_keys = rows_nw * K + cols_nw
         # (region, col) pairs, col-ascending per region
         for go, (_st, _cn, _sh, gutters, w, _b, _t) in enumerate(gregs):
             prev = 0
@@ -1398,7 +1275,7 @@ def _emit_cols(
         pair_maxlen = np.zeros(len(pair_meta), dtype=np.int64)
         np.maximum.at(pair_maxlen, spB, lenB)
         # §6m projection marginalia + sub-region rows (non-empty pairs
-        # only, matching the per-page col_entries)
+        # only: an empty column is no region)
         rel = round(cfg.marginalia_width_frac * 100)
         pair_row = np.full(len(pair_meta), -1, dtype=np.int64)
         p_at = 0
@@ -1436,7 +1313,10 @@ def _emit_cols(
     fi0 = np.asarray(rg_first, dtype=np.int64)
     co0 = np.asarray(rg_col, dtype=np.int64)
     pg0 = np.asarray(rg_pg, dtype=np.int64)
-    order = np.lexsort((co0, fi0, _TG_LUT[lb0], bd0, pg0))
+    # §7 reading order; §7p: page-column pages lead with the column
+    # (column-major ACROSS bands)
+    pm = np.isin(pg0, np.fromiter(page_cols, np.int64, len(page_cols)))
+    order = np.lexsort((co0, fi0, _TG_LUT[lb0], bd0, np.where(pm, co0, 0), pg0))
     new_of_old = np.empty(len(rg_lab), dtype=np.int64)
     new_of_old[order] = np.arange(len(rg_lab), dtype=np.int64)
 
@@ -1484,400 +1364,64 @@ def _emit_cols(
     )
 
 
-# region-type string for each line class that can open a region
+# region-type string for each line class that can open a region (a
+# dropcap that reaches emission unmerged keeps the spec type)
 _CODE_RT = {
     C_TEXT: RT_TEXT,
     C_TABLE: RT_TABLE,
     C_TOOL: RT_TOOL,
     C_MARG: RT_MARGINALIA,
     C_HEADER: RT_HEADER,
-    C_DROPCAP: "dropcap",
+    C_DROPCAP: RT_DROPCAP,
     C_SEP: RT_SEPARATOR,
 }
 
 
-def _split_long_spans(spans, cfg: ExtractConfig):
+def _line_split_pieces(text: str, cfg: ExtractConfig):
     """SPEC §9L curved-line splitting (-cl mode analog,
-    separate_lines.py:128-673): long spans subdivide at the smoothed
-    VALLEYS of their own char-ink profile — the §6 integer-gaussian
-    valley machinery run per span, with sigma scaled by span length
-    (the data-dependent-sigma analog, separate_lines.py:240-265).
-    Only active when cfg.enable_line_split."""
-    out = []
-    for sp in spans:
-        cs, ce, text, ca, cb = sp
-        L = len(text)
-        if L < cfg.line_split_min_len:
-            out.append(sp)
-            continue
-        sigma = cfg.line_split_sigma * min(
-            1 + L // cfg.line_split_scale, cfg.line_split_max_scale
-        )
-        v = _ink_row(text)
-        sm = _smooth_profile(v.astype(np.int64), sigma)
-        max_s = int(sm.max()) if L else 0
-        cuts = []
-        if max_s > 0:
-            rel_pct = int(round(cfg.line_split_rel_depth * 100))
-            peak_pct = int(round(cfg.gutter_peak_frac * 100))
-            p = 0
-            while p < L:
-                if text[p] == " ":
-                    q = p
-                    while q + 1 < L and text[q + 1] == " ":
-                        q += 1
-                    if q - p + 1 >= cfg.line_split_gap:
-                        depth = int(sm[p : q + 1].min())
-                        if depth * 100 <= rel_pct * max_s:
-                            left = int(sm[:p].max()) if p > 0 else 0
-                            right = int(sm[q + 1 :].max()) if q + 1 < L else 0
-                            if min(left, right) * 100 >= peak_pct * max_s:
-                                cuts.append((p, q))
-                    p = q + 1
-                else:
-                    p += 1
-        if not cuts:
-            out.append(sp)
-            continue
-        pieces = []
-        last_end = 0
-        for a, b in cuts:
-            if a > last_end:
-                pieces.append((last_end, a))
-            last_end = b + 1
-        if last_end < L:
-            pieces.append((last_end, L))
-        if len(pieces) <= 1:
-            out.append(sp)
-            continue
-        for a, b in pieces:
-            out.append((cs + a, cs + b, text[a:b], ca + a, ca + b))
-    return out
-
-
-def _col_of(p: int, gutters) -> int:
-    """Column index of raw position p given page gutters: the number
-    of gutters entirely to its left (SPEC §6p)."""
-    c = 0
-    for _g0, g1 in gutters:
-        if g1 < p:
-            c += 1
-    return c
-
-
-def _emit_page(
-    regions, n, ratio, used_b,
-    raw, strp, lstart, lead, slen, rlen,
-    cfg: ExtractConfig, want_diag: bool, gutter_cache=None,
-    page_ctx=None, page_gutter_cache=None,
-):
-    """SPEC §§6-10 for one page: column split, span materialization,
-    reading order, drop-capital merge, small-fragment adherence,
-    emission. ``regions`` is [[rtype, band, first_line, col, lids]] with
-    batch-global line indices into the per-line feature arrays.
-    ``page_ctx`` = (page_first_line, cls_array, active_array) enables
-    the §6p page-column band recompute."""
-
-    def diag_or_spans(spans, n_regions, max_cols, slope):
-        if want_diag:
-            return (
-                n, len(spans), n_regions, max_cols, slope,
-                bool(abs(slope) >= cfg.slope_threshold), ratio, used_b,
-            )
-        return spans
-
-    # --- §6 pre-pass: per-block deskew + gutters (memoized) ---------------
-    block_res = {}  # rfirst -> (shifts, sh_prof, gutters)
-    n_text_blocks = 0
-    for rtype, rband, rfirst, _c, lids in regions:
-        if rtype != RT_TEXT:
-            continue
-        n_text_blocks += 1
-        if gutter_cache is not None and rfirst in gutter_cache:
-            block_res[rfirst] = gutter_cache[rfirst]
-            continue
-        shifts = None
-        sh_prof = None
-        if len(lids) >= cfg.min_block_lines:
-            A, B = _ls_slope_int([int(lead[i]) for i in lids])
-            if B > 0 and abs(A) >= cfg.slope_threshold * B:
-                res = _choose_shear(
-                    [_ink_row(raw[i]) for i in lids],
-                    [int(rlen[i]) for i in lids],
-                    [int(lead[i]) for i in lids],
-                    cfg,
-                )
-                if res is not None:
-                    _s_star, shifts, sh_prof = res
-        if shifts is not None:
-            gutters = _select_gutters(sh_prof, cfg)
-        elif len(lids) < cfg.min_block_lines:
-            gutters = []
+    separate_lines.py:128-673) of one span: it subdivides at the
+    smoothed VALLEYS of its own char-ink profile — the §6 integer-
+    gaussian valley machinery run per span, with sigma scaled by span
+    length (the data-dependent-sigma analog, separate_lines.py:240-265).
+    Returns the [a, b) pieces, or None when the span stays whole."""
+    L = len(text)
+    if L == 0 or L < cfg.line_split_min_len:
+        return None
+    sigma = cfg.line_split_sigma * min(
+        1 + L // cfg.line_split_scale, cfg.line_split_max_scale
+    )
+    sm = _smooth_profile(_ink_row(text).astype(np.int64), sigma)
+    max_s = int(sm.max())
+    if max_s <= 0:
+        return None
+    rel_pct = int(round(cfg.line_split_rel_depth * 100))
+    peak_pct = int(round(cfg.gutter_peak_frac * 100))
+    cuts = []
+    p = 0
+    while p < L:
+        if text[p] == " ":
+            q = p
+            while q + 1 < L and text[q + 1] == " ":
+                q += 1
+            if q - p + 1 >= cfg.line_split_gap:
+                depth = int(sm[p : q + 1].min())
+                if depth * 100 <= rel_pct * max_s:
+                    left = int(sm[:p].max()) if p > 0 else 0
+                    right = int(sm[q + 1 :].max()) if q + 1 < L else 0
+                    if min(left, right) * 100 >= peak_pct * max_s:
+                        cuts.append((p, q))
+            p = q + 1
         else:
-            gutters = _find_gutters(raw, rlen, lids, cfg)
-        block_res[rfirst] = (shifts, sh_prof, gutters)
-
-    # --- §6p page-column mode (return_boxes_of_images_by_order_of_
-    # reading_new analog, utils/__init__.py:1599-2255): when >= 2 text
-    # blocks exist and any block shows column structure, detect gutters
-    # over the UNION ink profile of all text-block lines; if found, the
-    # whole page splits by the page gutters and regions order
-    # column-major ACROSS bands. -------------------------------------------
-    page_gutters = None
-    page_w = 0
-    if (
-        n_text_blocks >= 2
-        and any(g for (_s, _p, g) in block_res.values())
-        and page_gutter_cache is not None
-        and page_ctx is not None
-        and page_ctx[0] in page_gutter_cache
-    ):
-        # batched pre-pass already ran the union-profile valley scan
-        page_w, pg = page_gutter_cache[page_ctx[0]]
-        page_gutters = pg if pg else None
-    elif n_text_blocks >= 2 and any(g for (_s, _p, g) in block_res.values()):
-        all_lids = np.asarray(
-            [i for r in regions if r[0] == RT_TEXT for i in r[4]], dtype=np.int64
-        )
-        lens_pg = rlen[all_lids]
-        page_w = int(lens_pg.max()) if len(all_lids) else 0
-        if 0 < page_w <= 512:
-            grid = (
-                raw[all_lids]
-                .astype(f"U{page_w}")
-                .view(np.uint32)
-                .reshape(len(all_lids), page_w)
-            )
-            valid = (
-                np.arange(page_w, dtype=np.int64)[None, :] < lens_pg[:, None]
-            )
-            prof = ((grid != 32) & valid).sum(axis=0).astype(np.int64)
-            pg = _select_gutters(prof, cfg)
-            if pg:
-                page_gutters = pg
-        elif page_w > 512:
-            prof = np.zeros(page_w, dtype=np.int64)
-            for i in all_lids:
-                row = _ink_row(raw[i])
-                if len(row):
-                    prof[: len(row)] += row
-            pg = _select_gutters(prof, cfg)
-            if pg:
-                page_gutters = pg
-
-    # §6p band recompute + column assignment: a separator contained in
-    # ONE column (mother/child containment, utils/__init__.py:213-297)
-    # no longer advances the global band counter; every region gets the
-    # column holding its first line's first ink
-    if page_gutters is not None and page_ctx is not None:
-        page_first, cls_arr, active_arr = page_ctx
-        band_line = [0] * n
-        band = 0
-        run = 0
-        for k in range(n):
-            i = page_first + k
-            band_line[k] = band
-            if not active_arr[i]:
-                continue  # border lines: outside the page walk
-            if cls_arr[i] == C_BLANK:
-                run += 1
-                if run == cfg.band_blank_gap:
-                    band += 1
-                continue
-            run = 0
-            if cls_arr[i] == C_SEP:
-                a = int(lead[i])
-                b = a + int(slen[i])
-                if b > a and _col_of(a, page_gutters) != _col_of(b - 1, page_gutters):
-                    band += 1
-        for r in regions:
-            r[1] = band_line[r[2] - page_first]
-            r[3] = _col_of(int(lead[r[2]]), page_gutters)
-
-    # §6 column split + span materialization. Span tuples carry their
-    # within-line column range (col_a, col_b) for the §9 overlap-argmax
-    # adherence; emission drops the extra fields.
-    out_regions = []  # (rtype, band, first_line, col_idx, [(cs, ce, text, col_a, col_b)])
-    max_cols = 1
-    sx: list[int] = []
-    sy: list[int] = []
-
-    def strip_span(i):
-        cs = int(lstart[i] + lead[i])
-        ca = int(lead[i])
-        return (cs, cs + int(slen[i]), strp[i], ca, ca + int(slen[i]))
-
-    for rtype, rband, rfirst, _c, lids in regions:
-        if rtype == RT_TEXT:
-            if page_gutters is not None:
-                shifts, sh_prof, gutters = None, None, page_gutters
-            else:
-                shifts, sh_prof, gutters = block_res[rfirst]
-            if gutters:
-                max_cols = max(max_cols, len(gutters) + 1)
-                if page_gutters is not None:
-                    w = page_w
-                elif shifts is not None:
-                    w = len(sh_prof)
-                else:
-                    w = int(max(rlen[i] for i in lids))
-                segs = []
-                prev = 0
-                for g0, g1 in gutters:
-                    segs.append((prev, g0))
-                    prev = g1 + 1
-                segs.append((prev, w))
-                col_entries = []
-                for col, (a, b) in enumerate(segs):
-                    col_spans = []
-                    for k, i in enumerate(lids):
-                        sh = shifts[k] if shifts is not None else 0
-                        piece = raw[i][a + sh : b + sh]
-                        # single left scan + right scan (strip() +
-                        # lstrip() would walk the left edge twice)
-                        ls = piece.lstrip()
-                        if not ls:
-                            continue
-                        s = ls.rstrip()
-                        pl = len(piece) - len(ls)
-                        cs = int(lstart[i]) + a + sh + pl
-                        col_spans.append((cs, cs + len(s), s, a + pl, a + pl + len(s)))
-                    if col_spans:
-                        col_entries.append((col, a, b, col_spans))
-                # §6m projection-based marginalia (utils/marginals.py
-                # analog): a narrow, short-lined OUTER column is a
-                # marginalia region, not a text column
-                n_e = len(col_entries)
-                rel = round(cfg.marginalia_width_frac * 100)
-                for idx, (col, a, b, col_spans) in enumerate(col_entries):
-                    rt = RT_TEXT
-                    if n_e >= 2 and (idx == 0 or idx == n_e - 1):
-                        wd = b - a
-                        others = max(
-                            bb - aa
-                            for j, (_c, aa, bb, _s) in enumerate(col_entries)
-                            if j != idx
-                        )
-                        if (
-                            wd * 100 <= rel * w
-                            and 2 * wd <= others
-                            and all(
-                                len(sp[2]) <= cfg.marginalia_max_len
-                                for sp in col_spans
-                            )
-                        ):
-                            rt = RT_MARGINALIA
-                    out_regions.append([rt, rband, rfirst, col, col_spans])
-                continue
-            for k, i in enumerate(lids):
-                sx.append(k)
-                sy.append(int(lead[i]))
-            spans = [strip_span(i) for i in lids if slen[i] > 0]
-            if spans:
-                out_regions.append([RT_TEXT, rband, rfirst, 0, spans])
-        else:
-            spans = [strip_span(i) for i in lids if slen[i] > 0]
-            if spans:
-                out_regions.append([rtype, rband, rfirst, _c, spans])
-
-    slope = 0.0
-    if len(sx) >= 2:
-        ax = np.asarray(sx, dtype=np.float64)
-        ay = np.asarray(sy, dtype=np.float64)
-        mx = ax.sum() / len(ax)
-        my = ay.sum() / len(ay)
-        dx = ax - mx
-        var = float((dx * dx).sum())
-        if var > 0:
-            slope = float((dx * (ay - my)).sum()) / var
-
-    # §7 reading order; §7p: page-column mode orders column-major
-    # ACROSS bands (all of column 0 top-down, then column 1, ...)
-    tg = {RT_HEADER: 0, RT_TEXT: 1, RT_TOOL: 1, RT_TABLE: 1, "dropcap": 1, RT_MARGINALIA: 2, RT_SEPARATOR: 3}
-    if page_gutters is not None:
-        out_regions.sort(key=lambda r: (r[3], r[1], tg[r[0]], r[2]))
-    else:
-        out_regions.sort(key=lambda r: (r[1], tg[r[0]], r[2], r[3]))
-
-    # §8 drop-capital merge
-    merged = []
-    i = 0
-    while i < len(out_regions):
-        r = out_regions[i]
-        if (
-            r[0] == "dropcap"
-            and i + 1 < len(out_regions)
-            and out_regions[i + 1][0] == RT_TEXT
-            and out_regions[i + 1][1] == r[1]
-            and out_regions[i + 1][4]
-        ):
-            tgt = out_regions[i + 1]
-            dcs = r[4][0][0]
-            dtext = r[4][0][2]
-            fcs, fce, ftext, fca, fcb = tgt[4][0]
-            # merged span keeps the TARGET's column range (col ranges
-            # are per-line; the dropcap sits on its own line)
-            tgt[4][0] = (dcs, fce, dtext + ftext, fca, fcb)
-            merged.append(tgt)
-            i += 2
-            continue
-        if r[0] == "dropcap":
-            r[0] = RT_DROPCAP
-        merged.append(r)
-        i += 1
-
-    # §9 small-fragment adherence: overlap-argmax (the pairwise
-    # small-x-big overlap matrix of utils/__init__.py:923-948 in 1-D) —
-    # each fragment merges into the big span with maximal column
-    # overlap; ties break to the index-nearest, then earliest, big.
-    final_regions = []
-    for r in merged:
-        if r[0] != RT_TEXT:
-            final_regions.append(r)
-            continue
-        spans_r = r[4]
-        if cfg.enable_line_split:
-            spans_r = _split_long_spans(spans_r, cfg)  # §9L (-cl mode)
-        bigs = [
-            j for j, sp in enumerate(spans_r)
-            if len(sp[2]) > cfg.small_fragment_max_len
-        ]
-        if not bigs:
-            if spans_r:
-                final_regions.append(r)
-            continue
-        pre = {j: [] for j in bigs}
-        suf = {j: [] for j in bigs}
-        for j, sp in enumerate(spans_r):
-            if len(sp[2]) > cfg.small_fragment_max_len:
-                continue
-            best, bo, bd = bigs[0], -1, None
-            for i in bigs:
-                b = spans_r[i]
-                ov = max(0, min(sp[4], b[4]) - max(sp[3], b[3]))
-                dist = abs(j - i)
-                if ov > bo or (ov == bo and dist < bd):
-                    best, bo, bd = i, ov, dist
-            (pre if j < best else suf)[best].append(sp)
-        out_spans = []
-        for i in bigs:
-            cs, ce, text, ca, cb = spans_r[i]
-            if pre[i]:
-                text = " ".join(p[2] for p in pre[i]) + " " + text
-                cs = pre[i][0][0]
-            if suf[i]:
-                text = text + " " + " ".join(p[2] for p in suf[i])
-                ce = suf[i][-1][1]
-            out_spans.append((cs, ce, text, ca, cb))
-        r[4] = out_spans
-        final_regions.append(r)
-
-    # §10 emission
-    spans = []
-    for rs, r in enumerate(final_regions):
-        for sp in r[4]:
-            spans.append((len(spans), r[0], rs, sp[0], sp[1], sp[2]))
-    return diag_or_spans(spans, len(final_regions), max_cols, slope)
+            p += 1
+    pieces = []
+    last_end = 0
+    for a, b in cuts:
+        if a > last_end:
+            pieces.append((last_end, a))
+        last_end = b + 1
+    if last_end < L:
+        pieces.append((last_end, L))
+    return pieces if len(pieces) > 1 else None
 
 
 # integerized gaussian weights per sigma (shared by spec with the
@@ -1923,85 +1467,17 @@ def _smooth_profile(profile: np.ndarray, sigma: float) -> np.ndarray:
     return sm
 
 
-def _select_gutters(profile: np.ndarray, cfg: ExtractConfig):
-    """SPEC §6 valley machinery over an ink profile: smoothed
-    relative-depth valleys with stray tolerance and deepest-first
-    suppression (find_num_col + find_peaks analog,
-    utils/__init__.py:443-503, separate_lines.py:57-103)."""
-    w = len(profile)
-    if w < 2:
-        return []
-    # cheap structural pre-pass first: smoothing only runs when at
-    # least one run survives width/zero-anchor/position checks. A
-    # vectorized quick-reject (a qualifying run exists IFF some zero
-    # column has a <= stray neighbor) bails before any run extraction
-    # — most profiles reaching here (e.g. every sheared profile of a
-    # skewed single-column paragraph) have no such pair.
-    stray = cfg.gutter_max_stray_lines
-    pv = np.asarray(profile)
-    z = pv == 0
-    if not z.any():
-        return []
-    low = pv <= stray
-    if not ((z[:-1] & low[1:]) | (z[1:] & low[:-1])).any():
-        return []
-    # run extraction stays a pure-python scan: profiles are tiny and
-    # the numpy run-extraction chain (diff/flatnonzero/concat/cumsum)
-    # costs more in per-call dispatch than the loop saves
-    pv_l = pv.tolist()
-    lo_c = cfg.gutter_min_frac * w
-    hi_c = cfg.gutter_max_frac * w
-    pre = []
-    p = 0
-    while p < w:
-        if pv_l[p] <= stray:
-            q = p
-            has0 = pv_l[p] == 0
-            while q + 1 < w and pv_l[q + 1] <= stray:
-                q += 1
-                has0 = has0 or pv_l[q] == 0
-            if q - p + 1 >= 2 and has0 and lo_c <= (p + q) // 2 <= hi_c:
-                pre.append((p, q))
-            p = q + 1
-        else:
-            p += 1
-    if not pre:
-        return []
-    sm = _smooth_profile(profile, cfg.gutter_sigma)
-    max_s = int(sm.max())
-    if max_s == 0:
-        return []
-    rel_pct = int(round(cfg.gutter_rel_depth * 100))
-    peak_pct = int(round(cfg.gutter_peak_frac * 100))
-    kept = []
-    for a, b in pre:
-        depth = int(sm[a : b + 1].min())
-        if depth * 100 > rel_pct * max_s:
-            continue  # valley not deep enough relative to the peak
-        # two-sided prominence: a real gutter separates two ink PEAKS;
-        # the ragged tail of a block (only the longest line inks) has
-        # no right-side peak and is rejected
-        left_max = int(sm[:a].max()) if a > 0 else 0
-        right_max = int(sm[b + 1 :].max()) if b + 1 < w else 0
-        if min(left_max, right_max) * 100 < peak_pct * max_s:
-            continue
-        kept.append((depth, a, b))
-    # W6 suppression: keep the deepest max_columns-1 valleys, then
-    # restore positional order
-    kept.sort()
-    kept = kept[: cfg.max_columns - 1]
-    kept.sort(key=lambda t: t[1])
-    return [(a, b) for _, a, b in kept]
-
-
 def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
-    """Batched `_select_gutters` over a (m, W) int64 profile grid whose
-    rows are zero-padded past each block's true width. Returns one
-    gutter list per row, bit-identical to
-    ``_select_gutters(prof_grid[r, :widths[r]], cfg)`` — the A/B fuzz
-    in tests/test_kernel_oracle.py asserts this. All stages (run
-    extraction, gaussian smoothing, depth/prominence) run as grid ops;
-    only the final W6 per-row suppression walks survivors in Python."""
+    """SPEC §6 valley machinery (find_num_col + find_peaks analog,
+    utils/__init__.py:443-503, separate_lines.py:57-103) over a (m, W)
+    int64 profile grid whose rows are zero-padded past each block's
+    true width: smoothed relative-depth valleys with stray tolerance,
+    two-sided prominence and deepest-first suppression. Returns one
+    gutter list per row, equal to the oracle's
+    ``_select_gutters_naive(prof_grid[r, :widths[r]], cfg)`` (fuzzed
+    in tests/test_kernel_oracle.py). All stages (run extraction,
+    gaussian smoothing, depth/prominence) run as grid ops; only the
+    final W6 per-row suppression walks survivors in Python."""
     m, W = prof_grid.shape
     out: list[list] = [[] for _ in range(m)]
     if m == 0 or W < 2:
@@ -2012,8 +1488,8 @@ def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
     inw = colx < wds[:, None]
     z = (prof_grid == 0) & inw
     low = (prof_grid <= stray) & inw
-    # quick reject (scalar parity): a qualifying run exists only if
-    # some zero column has a <= stray neighbor
+    # quick reject: a qualifying run exists only if some zero column
+    # has a <= stray neighbor
     cand = ((z[:, :-1] & low[:, 1:]) | (z[:, 1:] & low[:, :-1])).any(axis=1)
     rows = np.flatnonzero(cand)
     if not len(rows):
@@ -2031,8 +1507,8 @@ def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
     blk = rstart // (W + 1)
     a = rstart - blk * (W + 1)
     b = rend - blk * (W + 1)
-    # scalar filters: width >= 2, contains a zero, center within frac
-    # bounds of the block's true width (float compare, as scalar)
+    # run filters: width >= 2, contains a zero, center within frac
+    # bounds of the block's true width (float compare, as the oracle)
     keep = (b - a) >= 1
     zc = np.cumsum(z[rows], axis=1)
     zin = zc[blk, b] - np.where(a > 0, zc[blk, np.maximum(a - 1, 0)], 0)
@@ -2050,7 +1526,7 @@ def _select_gutters_batch(prof_grid: np.ndarray, widths, cfg: ExtractConfig):
     srows = np.unique(blk)  # indices into `rows` that still need smoothing
     rix = np.searchsorted(srows, blk)
     # batched integer gaussian smoothing: beyond-width entries are zero
-    # by construction, so convolving the padded row equals the scalar
+    # by construction, so convolving the padded row equals the
     # zero-padded convolution on [0, w)
     r, wts = _gauss_weights(cfg.gutter_sigma)
     P = prof_grid[rows[srows]]
@@ -2124,108 +1600,23 @@ def _ls_slope_int(leads) -> tuple[int, int]:
     return n * sky - sk * sy, n * sk2 - sk * sk
 
 
-def _choose_shear(ink_rows, lens, leads, cfg: ExtractConfig, nz=None):
-    """SPEC §6d deskew: shear-grid argmax (return_deskew_slop analog,
-    separate_lines.py:1605-1646, in 1-D). Candidates are the LS slope's
-    neighborhood plus 0; each candidate de-indents line k by
-    round(s*k) (normalized to min 0) and scores the sheared ink
-    profile's normalized variance (sharper columns = higher variance);
-    the first candidate with maximal score wins. Returns
-    (s_star, shifts, sheared_profile) when |s_star| >= slope_threshold,
-    else None."""
-    A, B = _ls_slope_int(leads)
-    if B <= 0 or abs(A) < cfg.slope_threshold * B:
-        return None
-    sls = A / B
-    n = len(lens)
-    cands = [0.0, sls - 0.5, sls - 0.25, sls, sls + 0.25, sls + 0.5]
-    lens_i = [int(lens[k]) for k in range(n)]
-    lens_a = np.asarray(lens_i, dtype=np.int64)
-    ks = np.arange(n, dtype=np.float64)
-    # flatten the block's ink cells ONCE (row, col of every inked
-    # position, masked by each line's true length — rows may be padded
-    # when they come from a fixed-width grid); each candidate's
-    # sheared profile is then a single bincount of (col - shift[row])
-    # instead of a per-line slice-add loop
-    if nz is not None:
-        # precomputed (row, col) ink coordinates, already length-masked
-        rows_nz, cols_nz = nz
-    elif isinstance(ink_rows, np.ndarray) and ink_rows.ndim == 2:
-        rows_nz, cols_nz = np.nonzero(ink_rows)
-        valid = cols_nz < lens_a[rows_nz]
-        rows_nz = rows_nz[valid]
-        cols_nz = cols_nz[valid]
-    else:
-        rl, cl = [], []
-        for k in range(n):
-            nz = np.flatnonzero(ink_rows[k][: lens_i[k]])
-            cl.append(nz)
-            rl.append(np.full(len(nz), k, dtype=np.int64))
-        rows_nz = np.concatenate(rl) if rl else np.zeros(0, dtype=np.int64)
-        cols_nz = (
-            np.concatenate(cl).astype(np.int64) if cl else np.zeros(0, np.int64)
-        )
-    # candidates with identical shift vectors score identically, so
-    # build each distinct shift vector's profile once (short blocks
-    # collapse most of the grid)
-    # np.rint == Python round on doubles (both half-to-even), so the
-    # shift vectors are bit-identical to a scalar round() loop.
-    # Candidates with identical shift vectors score identically, so
-    # distinct vectors are profiled once — and ALL distinct profiles
-    # come from ONE offset-bincount over the flattened ink cells.
-    raw_all = np.rint(np.asarray(cands)[:, None] * ks[None, :]).astype(np.int64)
-    sh_all = raw_all - raw_all.min(axis=1, keepdims=True)
-    seen: dict[bytes, int] = {}
-    cand_slot = []  # candidate index -> distinct-vector slot
-    slots = []
-    for ci in range(len(cands)):
-        key = sh_all[ci].tobytes()
-        slot = seen.get(key)
-        if slot is None:
-            slot = len(slots)
-            seen[key] = slot
-            slots.append(ci)
-        cand_slot.append(slot)
-    dist = sh_all[slots]  # (m, n)
-    wps = (lens_a[None, :] - dist).max(axis=1)
-    m = len(slots)
-    wmax = int(wps.max()) if m else 0
-    if wmax <= 0:
-        return None
-    # per-line col-shift: idx < (len - sh) <= wp for every inked cell,
-    # so slot c's counts all land inside its own [c*wmax, c*wmax+wp_c)
-    idx = cols_nz[None, :] - dist[:, rows_nz]
-    ok = idx >= 0
-    flat = (np.arange(m, dtype=np.int64)[:, None] * wmax + idx)[ok]
-    profs = np.bincount(flat, minlength=m * wmax).reshape(m, wmax)
-    svs = profs.sum(axis=1)
-    sv2s = np.einsum("ij,ij->i", profs, profs)
-    best = None  # (score, wp, s, slot)
-    for ci, s in enumerate(cands):
-        slot = cand_slot[ci]
-        wp = int(wps[slot])
-        if wp <= 0:
-            continue
-        score = wp * int(sv2s[slot]) - int(svs[slot]) ** 2  # pop var * wp^2
-        if best is None or score * best[1] * best[1] > best[0] * wp * wp:
-            best = (score, wp, s, slot)
-    if best is None or abs(best[2]) < cfg.slope_threshold:
-        return None
-    slot = best[3]
-    return best[2], dist[slot].tolist(), profs[slot, : best[1]]
-
-
 def _choose_shear_batch(specs, cfg: ExtractConfig):
-    """Batched `_choose_shear` over many blocks at once. ``specs`` is a
-    list of (A, B, lens, rows_loc, cols_loc) per block — A/B the EXACT
-    integer LS-slope fraction (python ints, so sls = A/B is the same
-    correctly-rounded double the scalar path computes), lens the line
-    lengths, rows/cols the length-masked ink coordinates. Returns one
-    scalar-path-identical result per block: the entire candidate grid
-    (6 per block) shears through ONE rint, ONE offset bincount and ONE
+    """SPEC §6d deskew (return_deskew_slop analog,
+    separate_lines.py:1605-1646, in 1-D) over many blocks at once.
+    Candidates are 0 plus the LS slope's +-0.5/+-0.25 neighborhood;
+    each de-indents line k by round(s*k) (normalized to min 0) and
+    scores the sheared ink profile's normalized variance; the first
+    maximal candidate wins. ``specs`` is a list of (A, B, lens,
+    rows_loc, cols_loc) per block — A/B the EXACT integer LS-slope
+    fraction (python ints, so sls = A/B is the correctly-rounded
+    double the oracle computes), lens the line lengths, rows/cols the
+    length-masked ink coordinates. Returns per block (s_star, shifts,
+    sheared_profile) when |s_star| >= slope_threshold, else None —
+    equal to the oracle's ``_choose_shear_naive`` (fuzzed in
+    tests/test_kernel_oracle.py). The entire candidate grid (6 per
+    block) shears through ONE rint, ONE offset bincount and ONE
     einsum; only the 6-way winner comparison (python ints — the
-    rational cross-product can exceed int64) walks blocks in Python.
-    A/B-fuzzed against the scalar path in tests/test_kernel_oracle.py."""
+    rational cross-product can exceed int64) walks blocks in Python."""
     nb = len(specs)
     if nb == 0:
         return []
@@ -2305,37 +1696,3 @@ def _ink_row(s: str) -> np.ndarray:
     if not s:
         return np.zeros(0, dtype=bool)
     return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32) != 32
-
-
-def _find_gutters(raw, rlen, lids, cfg: ExtractConfig):
-    """SPEC §6 gutters, numpy ink profile over the block."""
-    contiguous = isinstance(lids, range) and lids.step == 1
-    if contiguous:
-        w = int(rlen[lids.start : lids.stop].max()) if len(lids) else 0
-    else:
-        w = int(max(rlen[i] for i in lids))
-    if w == 0:
-        return []
-    if contiguous:
-        # numpy's fixed-width unicode dtype IS a UTF-32 grid: one
-        # astype over just this block yields per-char codes (0-padded
-        # past each line's end) — no per-line encodes, no global grid
-        blk = raw[lids.start : lids.stop]
-        grid = blk.astype(f"U{w}").view(np.uint32).reshape(len(blk), w)
-        # padding past each line's end is masked by LENGTH, not by code
-        # 0 — a literal NUL character inside text is ink (matches the
-        # oracle's `ch != ' '` and the non-contiguous fallback)
-        lens = rlen[lids.start : lids.stop]
-        valid = np.arange(w, dtype=np.int64)[None, :] < lens[:, None]
-        profile = ((grid != 32) & valid).sum(axis=0)
-    else:
-        profile = np.zeros(w, dtype=np.int64)
-        for i in lids:
-            s = raw[i]
-            if s.isascii():
-                a = np.frombuffer(s.encode(), dtype=np.uint8)
-            else:
-                a = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-            if len(a):
-                profile[: len(a)] += a != 32
-    return _select_gutters(profile, cfg)

@@ -16,7 +16,6 @@ Two complementary mechanisms:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -64,30 +63,3 @@ def partition_metrics(spans: DataFrame, run_id: str) -> DataFrame:
         .withColumn("committed_at", F.current_timestamp())
     )
 
-
-class StageTimer:
-    """Driver-side stage wall-clock log (the 'Enhancing took %.1fs'
-    analog, eynollah.py:2309-2339)."""
-
-    def __init__(self):
-        self.stages: dict[str, float] = {}
-        self._t0 = None
-        self._name = None
-
-    def start(self, name: str):
-        self._t0 = time.time()
-        self._name = name
-        return self
-
-    def stop(self):
-        if self._name is not None:
-            self.stages[self._name] = self.stages.get(self._name, 0.0) + (
-                time.time() - self._t0
-            )
-            self._name = None
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.stop()

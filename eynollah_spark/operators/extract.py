@@ -22,9 +22,12 @@ Scale notes (100 TB / 10^12 turns):
 - window stage: hash-partitioned by conv_id; a 10^6-turn conversation
   is ~10^7 span rows in one partition — handled by Spark's external
   sort, no driver involvement. For pathological cases the salted
-  variant (``extract_spans_salted``) splits a conversation into salted
-  chunks, runs per-chunk windows, and merges with an order-preserving
-  prefix-sum join, trading one extra small shuffle for skew immunity.
+  variant (``extract_spans_salted``) salts only the kernel stage: it
+  repartitions the turns on (conv_id, turn-hash salt), so one huge
+  conversation's kernel work spreads over ``salt_buckets`` tasks, at
+  the cost of one extra exchange. The id windows still run over the
+  whole conversation in one ``conv_id`` partition (AQE skew handling
+  and the external sort absorb it); there are no per-chunk windows.
 """
 
 from __future__ import annotations
@@ -118,8 +121,8 @@ def _kernel_iter(bc_cfg, metrics=None):
             model = LineModel(bc_cfg.value if bc_cfg is not None else DEFAULT_CONFIG)
             _MODEL_CACHE[key] = model
         for pdf in batches:
-            # fast- and slow-path frames yield separately (no pandas
-            # concat/consolidation); downstream windows impose order
+            # column-free and column-page frames yield separately (no
+            # pandas concat/consolidation); downstream windows impose order
             frames = analyze_turns_frames(pdf, model)
             if metrics is not None:
                 metrics["turns_in"].add(len(pdf))

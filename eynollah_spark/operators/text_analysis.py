@@ -282,6 +282,12 @@ def c4_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     the decision inputs so the gate is auditable. Pure Catalyst array
     expressions, zero shuffle.
 
+    Deliberate deviation from C4: the published filter drops a page
+    for an OPENING brace ``{`` only; here ``has_brace`` matches either
+    brace (``[{}]``), so a doc whose only brace is ``}`` is dropped
+    too. The DuckDB oracle SQL applies the same ``[{}]`` gate, so the
+    oracle comparison does not show this difference from C4.
+
     Returns per doc: (doc_id, n_lines, n_kept_lines, n_sentences,
     has_lorem, has_brace, c4_keep, clean_text).
     """

@@ -109,6 +109,24 @@ def test_query_matches_oracle(spark, name):
     assert not mismatches, f"{name}: {len(mismatches)} mismatched rows; first: {mismatches[0]}"
 
 
+def test_ann_recall_releases_cached_frames(spark):
+    """ann_recall persists the truth and each index's top-k while it
+    scores them; once it returns, the session holds no more persistent
+    RDDs than before (unpersist is asynchronous, so poll briefly)."""
+    import time
+
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
+    rows = entrymod.queries()["ann_recall"](spark, SF_DIR).collect()
+    assert len(rows) == 3
+    for _ in range(50):
+        leaked = jsc.getPersistentRDDs().size() - before
+        if leaked <= 0:
+            break
+        time.sleep(0.1)
+    assert leaked <= 0
+
+
 def test_every_query_has_entry_or_rows_only(spark):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

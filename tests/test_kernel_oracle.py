@@ -718,17 +718,15 @@ def test_fuzz_diag_agreement_all_modes(text, role):
 
 @pytest.mark.parametrize("seed", [3, 17, 99])
 def test_select_gutters_batch_matches_scalar(seed):
-    """A/B fuzz: the grid-vectorized valley machinery must be
-    bit-identical per row to the scalar _select_gutters on randomized
+    """The grid-vectorized valley machinery must be bit-identical per
+    row to the oracle's scalar _select_gutters_naive on randomized
     zero-padded profile grids (incl. all-zero rows, stray columns,
     degenerate widths 0/1, and flat-low plateaus)."""
     import numpy as np
 
     from eynollah_spark.config import ExtractConfig
-    from eynollah_spark.kernel.textpage import (
-        _select_gutters,
-        _select_gutters_batch,
-    )
+    from eynollah_spark.kernel.textpage import _select_gutters_batch
+    from eynollah_spark.oracle.reference import _select_gutters_naive
 
     rng = np.random.default_rng(seed)
     for cfg in (
@@ -752,24 +750,23 @@ def test_select_gutters_batch_matches_scalar(seed):
                 grid[r, :w] = row
             got = _select_gutters_batch(grid, widths, cfg)
             for r in range(m):
-                want = _select_gutters(grid[r, : int(widths[r])], cfg)
+                prof = [int(v) for v in grid[r, : int(widths[r])]]
+                want = _select_gutters_naive(prof, cfg)
                 assert got[r] == want, (r, int(widths[r]), grid[r].tolist())
 
 
 @pytest.mark.parametrize("seed", [5, 23, 71])
 def test_choose_shear_batch_matches_scalar(seed):
-    """A/B fuzz: the cross-block batched shear grid must reproduce the
-    scalar _choose_shear result (slope, shift vector, sheared profile)
-    for every block, including no-shear Nones, staggered columns, and
-    blocks whose candidates collapse to identical shift vectors."""
+    """The cross-block batched shear grid must reproduce the oracle's
+    scalar _choose_shear_naive result (slope, shift vector, sheared
+    profile) for every block, rendered as text lines — including
+    no-shear Nones, staggered columns, and blocks whose candidates
+    collapse to identical shift vectors."""
     import numpy as np
 
     from eynollah_spark.config import ExtractConfig
-    from eynollah_spark.kernel.textpage import (
-        _choose_shear,
-        _choose_shear_batch,
-        _ls_slope_int,
-    )
+    from eynollah_spark.kernel.textpage import _choose_shear_batch, _ls_slope_int
+    from eynollah_spark.oracle.reference import _choose_shear_naive
 
     rng = np.random.default_rng(seed)
     cfg = ExtractConfig()
@@ -778,19 +775,24 @@ def test_choose_shear_batch_matches_scalar(seed):
     for _ in range(30):
         n = int(rng.integers(3, 40))
         w = int(rng.integers(4, 120))
-        lens = rng.integers(1, w + 1, size=n)
-        ink = rng.random((n, w)) < 0.4
         # staggered indent so many blocks pass the slope gate
         leads = (np.arange(n) * float(rng.choice([0.0, 0.4, 1.0, 2.5]))
                  + rng.integers(0, 3, size=n)).astype(np.int64)
+        block = []
+        for k in range(n):
+            body = np.where(rng.random(int(rng.integers(1, w + 1))) < 0.4, "x", " ")
+            body[0] = "x"  # the lead is exactly the indent
+            block.append(" " * int(leads[k]) + "".join(body))
         A, B = _ls_slope_int([int(v) for v in leads])
         if B <= 0 or abs(A) < cfg.slope_threshold * B:
             continue  # batch contract: caller only passes gated blocks
-        rows, cols = np.nonzero(ink)
-        keep = cols < lens[rows]
-        specs.append((A, B, lens, rows[keep], cols[keep]))
-        scalar.append(_choose_shear(ink, lens, leads, cfg))
+        lens = np.asarray([len(ln) for ln in block], dtype=np.int64)
+        rows = [k for k, ln in enumerate(block) for ch in ln if ch != " "]
+        cols = [p for ln in block for p, ch in enumerate(ln) if ch != " "]
+        specs.append((A, B, lens, np.asarray(rows, np.int64), np.asarray(cols, np.int64)))
+        scalar.append(_choose_shear_naive(block, cfg))
     assert specs, "fuzz produced no gated blocks"
+    assert any(s is not None for s in scalar), "no block sheared"
     got = _choose_shear_batch(specs, cfg)
     assert len(got) == len(scalar)
     for g, s in zip(got, scalar):
@@ -799,7 +801,7 @@ def test_choose_shear_batch_matches_scalar(seed):
             continue
         assert g is not None
         assert g[0] == s[0] and g[1] == s[1]
-        assert np.array_equal(g[2], s[2])
+        assert [int(v) for v in g[2]] == s[2]
 
 
 def test_page_union_chunk_batching_matches_single_page():
@@ -922,18 +924,55 @@ def test_enhancement_tool_pages_bypass():
     assert page_diag_naive(text, "tool", cfg)["was_enhanced"] is False
 
 
+def _assert_diag_matches_oracle(g, text, role, cfg):
+    e = page_diag_naive(text, role, cfg)
+    for k in ("n_lines", "n_spans", "n_regions", "max_columns", "is_deskewed",
+              "used_binarized", "was_enhanced"):
+        assert e[k] == g[k], (k, e[k], g[k])
+    assert abs(e["slope"] - g["slope"]) < 1e-12
+    assert abs(e["agreement_ratio"] - g["agreement_ratio"]) < 1e-9
+
+
+def _batch_matches_oracle(texts, cfg, roles=None):
+    """Spans of every turn equal analyze_turn_naive's and diagnostics
+    equal page_diag_naive's, over ONE kernel batch."""
+    roles = roles or ["user"] * len(texts)
+    pdf = pd.DataFrame(
+        {
+            "conv_id": [f"c{i}" for i in range(len(texts))],
+            "turn_idx": [0] * len(texts),
+            "role": roles,
+            "text": texts,
+        }
+    )
+    m = LineModel(cfg)
+    out = analyze_turns_batch(pdf, m).sort_values(["conv_id", "span_idx"])
+    got = {}
+    for t in out.itertuples(index=False):
+        got.setdefault(t.conv_id, []).append(
+            (int(t.span_idx), t.region_type, int(t.region_seq),
+             int(t.char_start), int(t.char_end), t.text)
+        )
+    diags = page_diags_batch(pdf, m)
+    for i, (text, role) in enumerate(zip(texts, roles)):
+        want = [
+            (s.span_idx, s.region_type, s.region_seq, s.char_start, s.char_end, s.text)
+            for s in analyze_turn_naive(text, role, cfg)
+        ]
+        assert got.get(f"c{i}", []) == want, repr(text[:300])
+        _assert_diag_matches_oracle(diags.iloc[i], text, role, cfg)
+    return got
+
+
 @pytest.mark.parametrize("seed", [7, 41, 113, 227])
 def test_emit_cols_matches_per_page_walk(seed):
-    """A/B fuzz: the batched column-page emission (_emit_cols) must be
-    bit-identical to the per-page _emit_page walk on randomized
-    multi-column corpora — same protocol as _select_gutters_batch.
-    Covers gutter splits, sheared blocks, marginalia relabels,
+    """The array engine must match the oracle's per-page walk
+    (analyze_turn_naive / page_diag_naive) on randomized multi-column
+    corpora: gutter splits, sheared blocks, marginalia relabels,
     dropcaps, fragments and the empty-column edge."""
     import numpy as np
-    import pandas as pd
 
     from eynollah_spark.config import ExtractConfig
-    from eynollah_spark.kernel import textpage
 
     rng = np.random.default_rng(seed)
     words = ["alpha", "beta", "gamma", "delta", "ep", "zeta", "x", "Q"]
@@ -963,24 +1002,114 @@ def test_emit_cols_matches_per_page_walk(seed):
                 line = "---"
             lines.append(line)
         texts.append("\n".join(lines))
+    for cfg in (ExtractConfig(), ExtractConfig(small_fragment_max_len=0)):
+        _batch_matches_oracle(texts, cfg)
+
+
+# ---------------------------------------------------------------------------
+# wide planted pages: the fuzz alphabet stays under ~150 chars per line,
+# so these pin blocks wider than one narrow grid chunk and §6p pages
+# wider than 512 chars against the oracle
+# ---------------------------------------------------------------------------
+
+_WORDS = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do".split()
+
+
+def _words(k: int, width: int) -> str:
+    """Single-spaced words starting at word k, cut to exactly width."""
+    out = []
+    i = k
+    while len(" ".join(out)) < width:
+        out.append(_WORDS[i % len(_WORDS)])
+        i += 1
+    return " ".join(out)[:width].rstrip().ljust(width, "z")
+
+
+def _two_col(n, left, gap, right, skew=0, k0=0):
+    return [
+        " " * (skew * k) + _words(k0 + k, left) + " " * gap + _words(k0 + k + 3, right)
+        for k in range(n)
+    ]
+
+
+_WIDE_PAGES = {
+    # straight two-column block, 229 chars wide
+    "straight_wide_block": "\n".join(_two_col(5, 120, 6, 103)),
+    # two-column block skewed 1 char/line: the 3-wide gap staggers in
+    # the raw profile and only the sheared profile splits
+    "skewed_wide_block": "\n".join(_two_col(6, 130, 3, 90, skew=1)),
+    # two text blocks with 563-char lines, a contained separator and a
+    # header: §6p page-column mode over a page wider than 512 chars
+    "page_columns_wide": "\n".join(
+        ["# Wide columns"]
+        + _two_col(4, 300, 7, 256)
+        + ["---"]
+        + _two_col(5, 300, 7, 256, k0=2)
+        + ["", "", "tail paragraph line"]
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_WIDE_PAGES))
+def test_wide_planted_pages_match_oracle(name):
+    """Kernel spans and diagnostics equal the oracle's on the wide
+    planted pages, under the default config and with every optional
+    mode on; the default-config output really splits into columns."""
+    text = _WIDE_PAGES[name]
+    got = _batch_matches_oracle([text], DEFAULT_CONFIG)["c0"]
+    _batch_matches_oracle([text], _fuzz_cfg())
+    left_cols = [g for g in got if g[1] == "text" and g[5].startswith(tuple(_WORDS))]
+    assert len({g[2] for g in left_cols}) >= 2  # column regions
+    assert max(len(ln) for ln in text.split("\n")) > (512 if "page" in name else 192)
+    if name == "page_columns_wide":
+        # column-major across both blocks: every left-column span of
+        # the two blocks precedes every right-column span
+        ts = [g[5] for g in got]
+        assert ts.index(_words(0, 300)) < ts.index(_words(2, 300)) < ts.index(_words(3, 256))
+        g = page_diags_batch(
+            pd.DataFrame({"conv_id": ["c"], "turn_idx": [0], "role": ["user"], "text": [text]})
+        ).iloc[0]
+        assert g["max_columns"] == 2
+
+
+def test_line_split_all_fragment_region_stays_whole():
+    """§9L then §9: a text region whose split pieces would all be
+    fragments keeps its spans whole and unmerged, like the oracle."""
+    from eynollah_spark.config import ExtractConfig
+
+    cfg = ExtractConfig(enable_line_split=True, line_split_min_len=8)
+    text = "ab      cd\nx\n\n\nplain paragraph line here"
+    got = _batch_matches_oracle([text], cfg)["c0"]
+    assert [g[5] for g in got] == ["ab      cd", "x", "plain paragraph line here"]
+
+
+@pytest.mark.parametrize("cfg_name", ["default", "all_modes"])
+def test_diag_n_spans_equals_span_rows_corpus(cfg_name):
+    """Per turn, page_diags_batch's n_spans is the span row count of
+    analyze_turns_batch (both come from the one emission engine)."""
+    cfg = DEFAULT_CONFIG if cfg_name == "default" else _fuzz_cfg()
+    df = generate_local(CorpusSpec(n_convs=30, seed=11))
+    pdf = df[["conv_id", "turn_idx", "role", "text"]]
+    _assert_n_spans_matches_rows(pdf, cfg)
+
+
+def _assert_n_spans_matches_rows(pdf, cfg):
+    m = LineModel(cfg)
+    rows = analyze_turns_batch(pdf, m).groupby(["conv_id", "turn_idx"]).size()
+    d = page_diags_batch(pdf, m)
+    want = [int(rows.get((c, t), 0)) for c, t in zip(d["conv_id"], d["turn_idx"])]
+    assert d["n_spans"].tolist() == want
+
+
+@settings(max_examples=40, deadline=None)
+@given(texts=st.lists(_text, min_size=1, max_size=6))
+def test_diag_n_spans_equals_span_rows_fuzz(texts):
     pdf = pd.DataFrame(
         {
             "conv_id": [f"c{i}" for i in range(len(texts))],
-            "turn_idx": np.zeros(len(texts), dtype=np.int64),
-            "role": ["user"] * len(texts),
+            "turn_idx": [0] * len(texts),
+            "role": ["tool" if i % 4 == 3 else "user" for i in range(len(texts))],
             "text": texts,
         }
     )
-    for cfg in (ExtractConfig(), ExtractConfig(small_fragment_max_len=0)):
-        m = textpage.LineModel(cfg)
-        try:
-            textpage._EMIT_COLS = False
-            want = textpage.analyze_turns_batch(pdf, m)
-            textpage._EMIT_COLS = True
-            got = textpage.analyze_turns_batch(pdf, m)
-        finally:
-            textpage._EMIT_COLS = True
-        key = ["conv_id", "turn_idx", "span_idx"]
-        want = want.sort_values(key).reset_index(drop=True)
-        got = got.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(got, want)
+    _assert_n_spans_matches_rows(pdf, _fuzz_cfg())
