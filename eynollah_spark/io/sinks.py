@@ -27,6 +27,18 @@ parquet with an explicit manifest directory:
   reducer parallelism of the window and write stage (and of the
   salted path's salt exchange): choose it no smaller than the
   executor core count;
+- a small bucket is not folded into a skewed bucket's task: AQE packs
+  neighbouring small partitions up to its target size (total bytes ÷
+  cores, at most the advisory 64 MiB), but by default it also
+  force-merges every packed group smaller than
+  ``coalescePartitions.minPartitionSize`` (1 MiB) into a neighbour.
+  When one skewed conversation fills its bucket, that neighbour is the
+  skewed bucket, and its task - already the longest, since a
+  conversation's windows run in one task - then also writes every
+  small bucket's rows and files. The write therefore runs with that
+  floor at 1 byte (``_MIN_PARTITION_SIZE``), so the skewed bucket's
+  task holds only its own bucket. At production sizes every bucket is
+  far above 1 MiB and the floor never fires either way;
 - `resume()` anti-joins the buckets already marked done (the
   "anti-join processed partitions on restart" from SURVEY §2.9/O14)
   and processes only the remainder. The bucket map and count are
@@ -61,6 +73,9 @@ from pyspark.sql import DataFrame, SparkSession
 # the bucket map, as recorded in each run's ``_layout``
 _BUCKET_MAP = "pmod(hash(conv_id), n_buckets)"
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+# scoped to 1 byte by the write: AQE then force-merges no small coalesced
+# group into a neighbour, such as a skewed bucket's task (module docstring)
+_MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
 
 def _bucket_col(n_buckets: int):
@@ -126,8 +141,10 @@ class BucketedSpanSink:
         unmarked and the retry rewrites them idempotently. An empty
         pending bucket (no rows hashed into it) is still committed —
         the successful job vacuously covered its predicate. The job is
-        planned with one shuffle partition per bucket (module
-        docstring), so each bucket is written as one file."""
+        planned with one shuffle partition per bucket and no minimum
+        coalesced partition size (module docstring), so each bucket is
+        written as one file and a skewed bucket's task writes only
+        that bucket."""
         done = self.done_buckets()
         todo = [
             b
@@ -141,10 +158,13 @@ class BucketedSpanSink:
         )
         self._write_layout()
         # the conv_id exchange is planned by this action: one partition
-        # per bucket; the session's own value comes back, also on failure
+        # per bucket, no small bucket folded into another's task; the
+        # session's own values come back, also on failure
+        scoped = {_SHUFFLE_PARTITIONS: str(self.n_buckets), _MIN_PARTITION_SIZE: "1"}
         conf = spans.sparkSession.conf
-        old = conf.get(_SHUFFLE_PARTITIONS, None)
-        conf.set(_SHUFFLE_PARTITIONS, str(self.n_buckets))
+        old = {k: conf.get(k, None) for k in scoped}
+        for k, v in scoped.items():
+            conf.set(k, v)
         try:
             (
                 bucketed.write.mode("overwrite")
@@ -153,10 +173,11 @@ class BucketedSpanSink:
                 .parquet(self.data_dir)
             )
         finally:
-            if old is None:
-                conf.unset(_SHUFFLE_PARTITIONS)
-            else:
-                conf.set(_SHUFFLE_PARTITIONS, old)
+            for k, v in old.items():
+                if v is None:
+                    conf.unset(k)
+                else:
+                    conf.set(k, v)
         for b in todo:
             self._mark_done(b)
         return todo

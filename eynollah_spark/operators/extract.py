@@ -26,8 +26,12 @@ Scale notes (100 TB / 10^12 turns):
   repartitions the turns on (conv_id, turn-hash salt), so one huge
   conversation's kernel work spreads over ``salt_buckets`` tasks, at
   the cost of one extra exchange. The id windows still run over the
-  whole conversation in one ``conv_id`` partition (AQE skew handling
-  and the external sort absorb it); there are no per-chunk windows.
+  whole conversation in one ``conv_id`` partition, so a skewed
+  conversation's windows run in ONE task (the external sort bounds its
+  memory, not its time). AQE's skew handling does not help here:
+  ``spark.sql.adaptive.skewJoin.*`` splits join partitions only, and
+  there are no per-chunk windows. What the bucketed sink does is keep
+  that task to the skewed conversation's own bucket (io/sinks.py).
 """
 
 from __future__ import annotations
@@ -161,10 +165,19 @@ def raw_spans(
     return pruned.mapInPandas(_kernel_iter(bc, metrics), schema=KERNEL_OUT_SCHEMA)
 
 
+def _pad4(n):
+    """``%04d`` of a positive int column without ``java.util.Formatter``
+    (per-row CPU in the window task): ``lpad`` truncates past 4 digits,
+    ``%04d`` never does, so numbers from 10,000 up pass through whole."""
+    s = n.cast("string")
+    return F.when(n < 10_000, F.lpad(s, 4, "0")).otherwise(s)
+
+
 def with_order_and_ids(spans: DataFrame) -> DataFrame:
     """Conversation-level windows (SPEC §10): global reading order,
     region ids (dense_rank == the reference's stateful counter,
-    utils/counter.py:39-48), line ids."""
+    utils/counter.py:39-48), line ids: ``region_%04d`` and
+    ``region_%04d_line_%04d``."""
     w_conv = Window.partitionBy("conv_id").orderBy("turn_idx", "span_idx")
     w_region = Window.partitionBy("conv_id", "turn_idx", "region_seq").orderBy(
         "span_idx"
@@ -177,14 +190,13 @@ def with_order_and_ids(spans: DataFrame) -> DataFrame:
                 Window.partitionBy("conv_id").orderBy("turn_idx", "region_seq")
             ),
         )
-        .withColumn("region_id", F.format_string("region_%04d", F.col("_region_num")))
+        .withColumn("_line_num", F.row_number().over(w_region))
+        .withColumn("region_id", F.concat(F.lit("region_"), _pad4(F.col("_region_num"))))
         .withColumn(
             "line_id",
-            F.format_string(
-                "region_%04d_line_%04d", F.col("_region_num"), F.row_number().over(w_region)
-            ),
+            F.concat(F.col("region_id"), F.lit("_line_"), _pad4(F.col("_line_num"))),
         )
-        .drop("_region_num")
+        .drop("_region_num", "_line_num")
     )
 
 
@@ -207,9 +219,11 @@ def extract_spans_salted(
     The kernel stage is pre-repartitioned on (conv_id, salt) where
     salt = turn-level hash, so one multi-million-turn conversation
     spreads over ``salt_buckets`` tasks instead of one. The id windows
-    then run on (conv_id) as usual — AQE's skew handling plus external
-    sort absorb the merge. Output is identical to extract_spans (the
-    invariance test asserts it).
+    then run on (conv_id) as usual, so a skewed conversation's windows
+    still run in one task: AQE's skew handling splits join partitions
+    only, and the external sort bounds memory, not time. The bucketed
+    sink keeps that task to the conversation's own bucket. Output is
+    identical to extract_spans (the invariance test asserts it).
     """
     salted = turns.withColumn(
         "_salt", (F.xxhash64("conv_id", "turn_idx") % salt_buckets).cast("int")

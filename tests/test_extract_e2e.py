@@ -173,6 +173,40 @@ def test_id_counter_semantics(spark):
         assert grp["line_id"].str.match(r"^region_\d{4}_line_\d{4}$").all()
 
 
+def test_ids_past_four_digits(spark):
+    """Ids keep ``%04d`` semantics past 9,999: padded to 4 digits below
+    10,000, never truncated above. One conversation has 10,001 regions
+    and another one region of 10,001 lines (a synthetic spans frame,
+    no kernel)."""
+    from eynollah_spark.operators.extract import with_order_and_ids
+
+    n = 10_001
+    ids = F.col("id").cast("int")
+    many_regions = spark.range(n).select(
+        F.lit("a").alias("conv_id"), F.lit(0).alias("turn_idx"),
+        ids.alias("span_idx"), ids.alias("region_seq"),
+    )
+    many_lines = spark.range(n).select(
+        F.lit("b").alias("conv_id"), F.lit(0).alias("turn_idx"),
+        ids.alias("span_idx"), F.lit(0).alias("region_seq"),
+    )
+    got = {
+        (r.conv_id, r.span_idx): (r.region_id, r.line_id)
+        for r in with_order_and_ids(many_regions.unionByName(many_lines))
+        .select("conv_id", "span_idx", "region_id", "line_id")
+        .collect()
+    }
+    want = {}
+    for i in range(n):
+        want["a", i] = ("region_%04d" % (i + 1), "region_%04d_line_%04d" % (i + 1, 1))
+        want["b", i] = ("region_%04d" % 1, "region_%04d_line_%04d" % (1, i + 1))
+    assert got == want
+    assert got["a", 9_998][0] == "region_9999"
+    assert got["a", 9_999][0] == "region_10000"
+    assert got["a", 10_000][0] == "region_10001"
+    assert got["b", 10_000][1] == "region_0001_line_10001"
+
+
 def test_adversarial_turns_match_oracle(spark):
     """Hostile page shapes through the REAL Spark pipeline (not just
     the local kernel): unclosed fence, banner+footer-only page, a

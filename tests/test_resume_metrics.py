@@ -299,19 +299,25 @@ def test_sink_writes_one_file_per_bucket(spark, tmp_path):
 
 
 def test_sink_write_restores_shuffle_partitions(spark, tmp_path):
-    """The write's bucket-sized shuffle partitions are scoped to it: the
-    session's value comes back after a write that commits and after one
-    whose job fails (and then nothing is committed)."""
+    """The write's scoped confs (bucket-sized shuffle partitions, no
+    minimum coalesced partition size) are scoped to it: the session's
+    values come back - re-set if the session had set one, unset if not -
+    after a write that commits and after one whose job fails (and then
+    nothing is committed)."""
     import pyspark.sql.functions as F
 
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert before[keys[0]] is not None and before[keys[1]] is None
     turns = spark.createDataFrame(generate_local(SPEC), schema=TRANSCRIPT_SCHEMA)
     spans = extract_spans(turns)
 
     ok = BucketedSpanSink(str(tmp_path / "ok"), n_buckets=5, run_tag="r1")
     assert ok.write(spans) == [0, 1, 2, 3, 4]
-    assert spark.conf.get(key) == before
+    assert {k: spark.conf.get(k, None) for k in keys} == before
 
     boom = spans.withColumn(
         "text",
@@ -320,8 +326,51 @@ def test_sink_write_restores_shuffle_partitions(spark, tmp_path):
     bad = BucketedSpanSink(str(tmp_path / "bad"), n_buckets=5, run_tag="r1")
     with pytest.raises(Exception, match="boom"):
         bad.write(boom)
-    assert spark.conf.get(key) == before
+    assert {k: spark.conf.get(k, None) for k in keys} == before
     assert bad.done_buckets() == set()
+
+
+def test_skewed_bucket_is_not_merged_with_small_buckets(spark, tmp_path):
+    """One conversation far larger than the rest fills its bucket; the
+    small buckets are packed into tasks of their own rather than folded
+    into the skewed bucket's task, so the write stage runs more than one
+    task, and every bucket is still one file."""
+    import numpy as np
+
+    std = generate_local(CorpusSpec(n_convs=40, seed=1))
+    n = 3_000
+    skewed = pd.DataFrame({
+        "conv_id": "skewed0001",
+        "turn_idx": np.arange(n, dtype=np.int32),
+        "role": "assistant",
+        "text": [f"step {i} finished without errors." for i in range(n)],
+        "tool": None,
+        "ts": pd.Timestamp("2025-06-01") + pd.to_timedelta(np.arange(n), unit="s"),
+    })
+    turns = spark.createDataFrame(pd.concat([std, skewed], ignore_index=True), schema=TRANSCRIPT_SCHEMA)
+    sink = BucketedSpanSink(str(tmp_path / "out"), n_buckets=16, run_tag="r1")
+
+    sc = spark.sparkContext
+    group = "skewed-bucket-write"
+    sc.setJobGroup(group, "bucketed sink write")
+    try:
+        assert len(sink.write(extract_spans(turns))) == 16
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = [
+        info
+        for j in tracker.getJobIdsForGroup(group)
+        for sid in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(sid)) is not None
+    ]
+    last = max(stages, key=lambda info: info.stageId)
+    assert last.numTasks > 1
+
+    files = _parquet_files(sink.data_dir)
+    assert len(files) > 8
+    assert {d: len(f) for d, f in files.items() if len(f) != 1} == {}
 
 
 def test_resume_refuses_other_bucket_layout(spark, tmp_path):
