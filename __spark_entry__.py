@@ -4563,7 +4563,7 @@ FROM turns
     # the conversation-level windows. Constants mirror ExtractConfig
     # defaults: border_scan_lines=3, binarize_retry_threshold=40.0,
     # header_max_len=60, header_vote_max_lines=2, band_blank_gap=2,
-    # separator_min_len=3; LINES_PER_TURN=4, TOKENS_PER_LINE=8.
+    # and config.SEP_MIN_LEN=3; LINES_PER_TURN=4, TOKENS_PER_LINE=8.
     def _cls_case(c: str, tables: bool = False, full_layout: bool = True) -> str:
         # the table rule sits after every other class, before 'text'
         # (SPEC §12) — mirrored only in the tables variant; the

@@ -1,10 +1,10 @@
 """Configuration constants for the extraction pipeline.
 
 The numeric constants mirror the reference's hard-coded thresholds
-(``eynollah.py:77-81``: SLOPE_THRESHOLD=0.13, RATIO_OF_TWO_MODEL_THRESHOLD=95.50,
-DPI_THRESHOLD=298, KERNEL=5x5) transposed to the text domain.  They are a
-frozen part of the *spec*: the single-node oracle and the Spark kernel
-both read them from here, so there is exactly one source of truth.
+(``eynollah.py:77-81``: SLOPE_THRESHOLD=0.13, DPI_THRESHOLD=298, KERNEL=5x5)
+transposed to the text domain.  They are a frozen part of the *spec*: the
+single-node oracle and the Spark kernel both read them from here, so there
+is exactly one source of truth.
 """
 
 from __future__ import annotations
@@ -25,9 +25,6 @@ class ExtractConfig:
     # agreement percentage below which the "binarized retry" path runs
     # (reference: rate_two_models <= 40 -> rerun on binarized input).
     binarize_retry_threshold: float = 40.0
-    # agreement percentage treated as "models agree" (reference
-    # RATIO_OF_TWO_MODEL_THRESHOLD = 95.50, eynollah.py:78).
-    agreement_threshold: float = 95.50
 
     # --- page border (extract_page analog, eynollah.py:673-710) ---
     # how many leading/trailing lines are searched for the boilerplate
@@ -68,8 +65,6 @@ class ExtractConfig:
     # utils/__init__.py:860-991): stripped length <= this merges into a
     # neighbor span of the same region.
     small_fragment_max_len: int = 2
-    # separator line: stripped length >= this, drawn only from SEP_CHARS
-    separator_min_len: int = 3
     # header line max length (headers are wide+short in the reference,
     # w/h >= 1.3 vote at utils/__init__.py:799-858)
     header_max_len: int = 60
@@ -167,6 +162,9 @@ DEFAULT_CONFIG = ExtractConfig()
 # character set that makes a separator rule line (class 3/"separator",
 # codes asserted at eynollah.py:1269-1282)
 SEP_CHARS = frozenset("-*=_—–~")
+# separator line: stripped length >= this, drawn only from SEP_CHARS
+# (SPEC §4)
+SEP_MIN_LEN = 3
 
 # region types (PAGE-XML region types, writer.py:142-248)
 RT_TEXT = "text"

@@ -3,12 +3,14 @@
 This is what Spark executes inside ``mapInPandas``: per Arrow batch,
 all character-level work (line classification, binarization, ink
 profiles) is done with Arrow/numpy vectorized ops across the
-*flattened line array of the whole batch*. Page assembly (SPEC §§1-5)
-runs as segmented numpy with per-page resets, and SPEC §§6-11 run in
-one array engine: batched gutter/deskew grids, the column split, and
-``_emit_core`` for reading order, merges and emission. Spans and page
-diagnostics both come out of that engine; ``oracle/reference.py`` is
-the independent per-page implementation it is tested against.
+*flattened line array of the whole batch* (``_line_stage``). Page
+assembly (SPEC §§1-5, ``_page_stage``) runs as segmented numpy with
+per-page resets, and SPEC §§6-10 run in one array engine
+(``_emit_stage``): batched gutter/deskew grids, the column split, and
+``_emit_core`` for reading order, merges and emission. Page
+diagnostics (§11, ``_diag_stage``) are read off that engine's arrays;
+``oracle/reference.py`` is the independent per-page implementation
+both are tested against.
 
 Reference parity (all citations into /root/reference/qurator/eynollah):
 - two-model classification + binarized-retry gate: eynollah.py:1148-1379
@@ -25,6 +27,7 @@ Reference parity (all citations into /root/reference/qurator/eynollah):
 from __future__ import annotations
 
 import re
+from collections import namedtuple
 
 import numpy as np
 import pandas as pd
@@ -41,6 +44,7 @@ from eynollah_spark.config import (
     RT_TEXT,
     RT_TOOL,
     SEP_CHARS,
+    SEP_MIN_LEN,
 )
 
 # blocks longer than this bypass the vectorized int64 LS-slope gate
@@ -56,9 +60,13 @@ C_FENCE, C_TOOL = 6, 7
 # table row (M10 analog; only produced when cfg.enable_tables)
 C_TABLE = 8
 
-_SEP_RE = "^[" + re.escape("".join(sorted(SEP_CHARS))) + "]{3,}$"
+_SEP_RE = "^[" + re.escape("".join(sorted(SEP_CHARS))) + "]{%d,}$" % SEP_MIN_LEN
 _HEADER_RE = r"^(?:#{1,6} |[A-Z][A-Z0-9_]{2,11}:)"
 _NONASCII_RE = r"[^\x00-\x7f]"
+
+
+def _bool(arrow_bool) -> np.ndarray:
+    return arrow_bool.to_numpy(zero_copy_only=False).astype(bool)
 
 
 class LineModel:
@@ -72,77 +80,46 @@ class LineModel:
     """
 
     # how many neighboring lines influence one line's label. The rule
-    # head is per-line (0); a contextual model (e.g. a CNN over a line
-    # window) would set its receptive-field half-width here, and the
-    # patch harness guarantees margin >= context so stitching is exact.
+    # head is per-line (0): patching cannot change its labels, so the
+    # harness runs it once over the whole array, and model B re-runs it
+    # only on the lines binarization alters. A contextual head (e.g. a
+    # CNN over a line window) sets its receptive-field half-width here;
+    # it is then run patch-wise, where margin >= context keeps the
+    # stitch exact, and model B re-runs it on every line.
     context_window: int = 0
 
     def __init__(self, cfg: ExtractConfig = DEFAULT_CONFIG):
         self.cfg = cfg
 
     # --- model A / model B shared rule head -------------------------------
-    def classify_stripped(self, stripped: pd.Series) -> np.ndarray:
-        """Vectorized SPEC §4 rules over a Series of stripped lines."""
-        cfg = self.cfg
-        n = len(stripped)
-        out = np.full(n, C_TEXT, dtype=np.int8)
-        slen = stripped.str.len().to_numpy()
-
-        blank = slen == 0
-        sep = stripped.str.match(_SEP_RE, na=False).to_numpy()
-        marg = (
-            stripped.str.startswith("[note:", na=False)
-            & stripped.str.endswith("]", na=False)
-        ).to_numpy()
-        header = (
-            stripped.str.match(_HEADER_RE, na=False).to_numpy()
-            & (slen <= cfg.header_max_len)
-        )
-        first = stripped.str.slice(0, 1)
-        dropcap = (slen == 1) & (first >= "A").to_numpy() & (first <= "Z").to_numpy()
-
-        # first-match-wins precedence, applied in reverse priority;
-        # header/dropcap only exist in full-layout mode (the M6/M7
-        # second-model pass, eynollah.py:1837)
-        if cfg.enable_tables:
-            table = stripped.str.count(r"\|").to_numpy() >= cfg.table_min_pipes
-            out[table] = C_TABLE
-        if cfg.full_layout:
-            out[dropcap] = C_DROPCAP
-            out[header] = C_HEADER
-        out[marg] = C_MARG
-        out[sep] = C_SEP
-        out[blank] = C_BLANK
-        return out
-
     def classify_arrow(self, stripped_pa, s_len: np.ndarray) -> np.ndarray:
-        """Arrow fast path of the rule head: same rules as
-        ``classify_stripped`` evaluated with pyarrow.compute (RE2) over
-        contiguous buffers. Pattern set is RE2-compatible and anchored,
-        so it is semantics-identical to the Python-re path (the fuzz
-        suite exercises both against the oracle)."""
+        """SPEC §4 rules over an Arrow array of stripped lines (and
+        their lengths), evaluated with pyarrow.compute (RE2) over
+        contiguous buffers. The patterns are RE2-compatible and
+        anchored; the kernel fuzz suite checks the labels against the
+        oracle's ``classify_line_naive``."""
         import pyarrow.compute as pc
 
         cfg = self.cfg
         n = len(s_len)
         out = np.full(n, C_TEXT, dtype=np.int8)
         blank = s_len == 0
-        sep = pc.match_substring_regex(stripped_pa, _SEP_RE).to_numpy(
-            zero_copy_only=False
-        ).astype(bool)
-        marg = (
-            pc.starts_with(stripped_pa, "[note:").to_numpy(zero_copy_only=False)
-            & pc.ends_with(stripped_pa, "]").to_numpy(zero_copy_only=False)
-        ).astype(bool)
-        header = pc.match_substring_regex(stripped_pa, _HEADER_RE).to_numpy(
-            zero_copy_only=False
-        ).astype(bool) & (s_len <= cfg.header_max_len)
+        sep = _bool(pc.match_substring_regex(stripped_pa, _SEP_RE))
+        marg = _bool(pc.starts_with(stripped_pa, "[note:")) & _bool(
+            pc.ends_with(stripped_pa, "]")
+        )
+        header = _bool(pc.match_substring_regex(stripped_pa, _HEADER_RE)) & (
+            s_len <= cfg.header_max_len
+        )
         first = pc.utf8_slice_codeunits(stripped_pa, 0, 1)
         dropcap = (
             (s_len == 1)
-            & pc.greater_equal(first, "A").to_numpy(zero_copy_only=False).astype(bool)
-            & pc.less_equal(first, "Z").to_numpy(zero_copy_only=False).astype(bool)
+            & _bool(pc.greater_equal(first, "A"))
+            & _bool(pc.less_equal(first, "Z"))
         )
+        # first-match-wins precedence, applied in reverse priority;
+        # header/dropcap only exist in full-layout mode (the M6/M7
+        # second-model pass, eynollah.py:1837)
         if cfg.enable_tables:
             table = (
                 pc.count_substring(stripped_pa, "|")
@@ -159,36 +136,54 @@ class LineModel:
         out[blank] = C_BLANK
         return out
 
-    def classify_patched(self, stripped: pd.Series) -> np.ndarray:
+    def classify_patched(self, stripped_pa, s_len: np.ndarray) -> np.ndarray:
         """Patch-wise application with overlap-margin stitching — the
         do_prediction graft (eynollah.py:522-639): the line array is
         tiled into patches of ``patch_lines`` with ``patch_margin``
         overlap on each side; only each patch's interior is written to
         the output (first/last patches keep their outer edge, the 9-case
-        interior rule at eynollah.py:590-634 collapsed to 1-D)."""
+        interior rule at eynollah.py:590-634 collapsed to 1-D). A
+        per-line head gives the whole-array labels patched or not, so
+        it runs once over the whole array."""
         cfg = self.cfg
-        n = len(stripped)
+        n = len(s_len)
         step = cfg.patch_lines - 2 * cfg.patch_margin
-        if n <= cfg.patch_lines or step <= 0:
-            return self.classify_stripped(stripped)
-        if self.context_window == 0:
-            # per-line model: interior-stitched patch output is exactly
-            # the whole-array prediction (margin writes are identity),
-            # so run the vectorized head once instead of per patch.
-            # The patch loop below stays live for contextual models and
-            # is equivalence-tested in tests/test_kernel_oracle.py.
-            return self.classify_stripped(stripped)
+        if self.context_window == 0 or n <= cfg.patch_lines or step <= 0:
+            return self.classify_arrow(stripped_pa, s_len)
         out = np.empty(n, dtype=np.int8)
-        start = 0
-        while start < n:
+        for start in range(0, n, step):
             lo = max(0, start - cfg.patch_margin)
             hi = min(n, start + step + cfg.patch_margin)
-            pred = self.classify_stripped(stripped.iloc[lo:hi])
-            w_lo = start
+            pred = self.classify_arrow(stripped_pa.slice(lo, hi - lo), s_len[lo:hi])
             w_hi = min(n, start + step)
-            out[w_lo:w_hi] = pred[w_lo - lo : w_hi - lo]
-            start += step
+            out[start:w_hi] = pred[start - lo : w_hi - lo]
         return out
+
+    def classify_two(self, lines_pa, stripped_pa, s_len: np.ndarray):
+        """The two-model ensemble input (eynollah.py:1148-1266): model A
+        labels the stripped lines, model B their binarized form (every
+        non-ASCII char removed, then stripped). Binarization alters only
+        the lines holding non-ASCII, so a per-line head re-classifies
+        just those and keeps model A's labels elsewhere; a contextual
+        head re-classifies every line. Returns (cls_a, cls_b)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        cls_a = self.classify_patched(stripped_pa, s_len)
+        cls_b = cls_a.copy()
+        redo = _bool(pc.match_substring_regex(lines_pa, _NONASCII_RE))
+        if not redo.any():
+            return cls_a, cls_b
+        if self.context_window:
+            redo[:] = True
+        bin_pa = pc.utf8_trim(
+            pc.replace_substring_regex(lines_pa.filter(pa.array(redo)), _NONASCII_RE, ""),
+            _PY_WHITESPACE,
+        )
+        cls_b[redo] = self.classify_patched(
+            bin_pa, pc.utf8_length(bin_pa).to_numpy().astype(np.int64)
+        )
+        return cls_a, cls_b
 
 
 # Every code point Python's str.strip()/str.isspace() treats as
@@ -208,9 +203,9 @@ _WS_LUT[[ord(c) for c in _PY_WHITESPACE]] = True
 def _flatten_lines_arrow(texts: pd.Series):
     """Split a batch of turn texts into one flat Arrow line array.
 
-    Returns (lines_pa: pa.StringArray (flattened), turn_ord: int64[],
-    line_start: int64[], n_per: int64[]). line_start is the char
-    offset of each line within its own turn text. All string traffic
+    Returns (lines_pa: pa.StringArray (flattened), line_start: int64[],
+    n_per: int64[], lens: int64[]). line_start is the char offset of
+    each line within its own turn text, lens its length. All string traffic
     stays in Arrow contiguous buffers; no per-line Python objects are
     created here.
     """
@@ -222,7 +217,6 @@ def _flatten_lines_arrow(texts: pd.Series):
     split = pc.split_pattern(arr, "\n")
     n_per = pc.list_value_length(split).to_numpy().astype(np.int64)
     lines_pa = pc.list_flatten(split)
-    turn_ord = np.repeat(np.arange(len(texts), dtype=np.int64), n_per)
     lens = pc.utf8_length(lines_pa).to_numpy().astype(np.int64)
     csum = np.cumsum(lens + 1)
     turn_first = np.zeros(len(texts), dtype=np.int64)
@@ -232,7 +226,7 @@ def _flatten_lines_arrow(texts: pd.Series):
     nonzero = n_per > 0
     base = np.repeat(global_start[turn_first[nonzero]], n_per[nonzero])
     line_start = global_start - base
-    return lines_pa, turn_ord, line_start, n_per, lens
+    return lines_pa, line_start, n_per, lens
 
 
 def _wrap_line(ln: str, width: int) -> list:
@@ -284,62 +278,95 @@ def enhance_page_text(text: str, cfg: ExtractConfig):
     return "\n".join(out), True
 
 
+# The arrays one batch carries between the kernel stages: page arrays
+# run over its turns, line arrays over its flattened lines, region
+# arrays over its §5b region runs. _line_stage builds it; _page_stage
+# and _emit_stage fill their own fields (None until then) with _replace.
+_Batch = namedtuple(
+    "_Batch",
+    # _line_stage: the input and config; per page; per line
+    "pdf cfg n_per tool_page was_enh"
+    " lines_np stripped_np line_start raw_len s_len lstr_len"
+    " is_banner is_footer is_fence cls_a cls_b"
+    # _page_stage: per page; per line; per region
+    " offsets ratio used_b page active cls band starts counts r_page reg_label"
+    # _emit_stage: [(page id per span, span frame)], the §6/§6d block
+    # gutters by first line, the §6p page columns by page
+    " parts gutter_cache page_cols",
+    defaults=(None,) * 14,
+)
+
+
 def analyze_turns_batch(
     pdf: pd.DataFrame, model: LineModel | None = None
 ) -> pd.DataFrame:
     """Batch kernel: pdf has columns (conv_id, turn_idx, role, text);
     returns (conv_id, turn_idx, span_idx, region_type, region_seq,
     char_start, char_end, text)."""
-    return _analyze_batch(pdf, model, want_diag=False)
+    frames = analyze_turns_frames(pdf, model)
+    if not frames:
+        return pd.DataFrame(
+            {
+                "conv_id": pd.Series([], dtype="object"),
+                "turn_idx": pd.Series([], dtype="int64"),
+                "span_idx": pd.Series([], dtype="int64"),
+                "region_type": pd.Series([], dtype="object"),
+                "region_seq": pd.Series([], dtype="int64"),
+                "char_start": pd.Series([], dtype="int64"),
+                "char_end": pd.Series([], dtype="int64"),
+                "text": pd.Series([], dtype="object"),
+            }
+        )
+    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
 
 def page_diags_batch(
     pdf: pd.DataFrame, model: LineModel | None = None
 ) -> pd.DataFrame:
     """Per-page diagnostics (SPEC §11)."""
-    return _analyze_batch(pdf, model, want_diag=True)
+    return _diag_stage(_emit_stage(_page_stage(_line_stage(pdf, model))))
 
 
 def analyze_turns_frames(
     pdf: pd.DataFrame, model: LineModel | None = None
 ) -> list[pd.DataFrame]:
-    """Iterator-friendly twin of ``analyze_turns_batch``: returns the
+    """Iterator-friendly form of ``analyze_turns_batch``: returns the
     column-free and column-page frames as a LIST (0-2 entries) instead of
     concatenating them — mapInPandas yields each directly, skipping
     the pandas block consolidation that concat forces. Row order
     across the frames is NOT part of the contract (extract.py imposes
     the conversation windows downstream)."""
-    return _analyze_batch(pdf, model, want_diag=False, as_frames=True)
+    return [f for _p, f in _emit_stage(_page_stage(_line_stage(pdf, model))).parts]
 
 
-def _analyze_batch(
-    pdf: pd.DataFrame, model, want_diag: bool, as_frames: bool = False
-):
+def _line_stage(pdf: pd.DataFrame, model: LineModel | None) -> _Batch:
+    """§1e enhancement, the line flatten, the Arrow per-line features
+    and the two-model classification of every line of the batch."""
+    import pyarrow.compute as pc
+
     if model is None:
         model = LineModel()
     cfg = model.cfg
-    import pyarrow.compute as pc
-
     texts = pdf["text"].astype("object").fillna("")
     roles = pdf["role"].to_numpy()
 
     # §1e enhancement pre-pass (gated; M1 analog): flagged low-density
     # non-tool pages are rewritten before the line flatten, so every
     # downstream feature/offset sees the enhanced text. The gate is
-    # vectorized; the rewrite itself runs only on the flagged subset.
+    # vectorized (the same density test as enhance_page_text, so every
+    # flagged page is enhanced); the rewrite runs only on that subset.
     was_enh = np.zeros(len(pdf), dtype=bool)
     if cfg.enable_enhancement and len(pdf):
         nl = texts.str.count("\n").to_numpy() + 1
         nc = texts.str.len().to_numpy()
-        flag = ((nc / nl) < cfg.enhancement_density_min) & (roles != "tool")
-        if flag.any():
+        was_enh = ((nc / nl) < cfg.enhancement_density_min) & (roles != "tool")
+        if was_enh.any():
             tv = texts.to_numpy(copy=True)
-            for i in np.flatnonzero(flag):
-                tv[i], e = enhance_page_text(tv[i], cfg)
-                was_enh[i] = e
+            for i in np.flatnonzero(was_enh):
+                tv[i] = enhance_page_text(tv[i], cfg)[0]
             texts = pd.Series(tv, dtype="object")
 
-    lines_pa, turn_ord, line_start, n_per, raw_len = _flatten_lines_arrow(texts)
+    lines_pa, line_start, n_per, raw_len = _flatten_lines_arrow(texts)
 
     # --- Arrow-vectorized per-line features over the whole batch ---
     # (contiguous buffers + RE2; _PY_WHITESPACE keeps .strip() parity)
@@ -352,65 +379,45 @@ def _analyze_batch(
         .astype(np.int64)
     )
 
-    def _b(arrow_bool):
-        return arrow_bool.to_numpy(zero_copy_only=False).astype(bool)
-
     is_banner = (
         (s_len >= 6)
-        & _b(pc.starts_with(stripped_pa, "==="))
-        & _b(pc.ends_with(stripped_pa, "==="))
+        & _bool(pc.starts_with(stripped_pa, "==="))
+        & _bool(pc.ends_with(stripped_pa, "==="))
     )
     is_footer = np.zeros(len(s_len), dtype=bool)
     for p in FOOTER_PREFIXES:
-        is_footer |= _b(pc.starts_with(stripped_pa, p))
-    is_fence_marker = _b(pc.starts_with(stripped_pa, "```"))
+        is_footer |= _bool(pc.starts_with(stripped_pa, p))
+    is_fence = _bool(pc.starts_with(stripped_pa, "```"))
+    cls_a, cls_b = model.classify_two(lines_pa, stripped_pa, s_len)
 
-    if model.context_window == 0:
-        cls_a = model.classify_arrow(stripped_pa, s_len)
-        # model B: binarized retry input (eynollah.py:1230-1266).
-        # Binarization only alters lines containing non-ASCII, so the
-        # second pass runs on exactly those lines; the rest reuse
-        # cls_a (identical input => identical per-line labels).
-        cls_b = cls_a.copy()
-        has_nonascii = _b(pc.match_substring_regex(lines_pa, _NONASCII_RE))
-        if has_nonascii.any():
-            import pyarrow as pa
-
-            bin_sub_pa = pc.utf8_trim(
-                pc.replace_substring_regex(
-                    lines_pa.filter(pa.array(has_nonascii)), _NONASCII_RE, ""
-                ),
-                _PY_WHITESPACE,
-            )
-            cls_b[has_nonascii] = model.classify_arrow(
-                bin_sub_pa, pc.utf8_length(bin_sub_pa).to_numpy().astype(np.int64)
-            )
-        stripped = None  # pandas Series not needed on the fast path
-    else:
-        stripped = pd.Series(
-            stripped_pa.to_numpy(zero_copy_only=False), dtype="object"
-        )
-        lines = pd.Series(lines_pa.to_numpy(zero_copy_only=False), dtype="object")
-        cls_a = model.classify_patched(stripped)
-        bin_stripped = lines.str.replace(_NONASCII_RE, "", regex=True).str.strip()
-        cls_b = model.classify_patched(bin_stripped)
-
-    # --- batch-wide page assembly (segmented numpy; SPEC §§1-5) ---
-    # Pages average ~13 lines, so per-page Python/numpy dispatch
-    # dominates when run page-at-a-time; instead every per-LINE pass
-    # (border trim, fence toggles, agreement gate, band splits, region
-    # runs) runs once over the flattened batch with per-page resets,
-    # and Python touches only per-REGION lists (~spans/3 items).
-    P = len(pdf)
-    n = len(lines_pa)
-    offsets = np.zeros(P + 1, dtype=np.int64)
-    np.cumsum(n_per, out=offsets[1:])
     # materialize Python strings once, at the boundary where span text
     # objects are needed anyway
-    lines_np = lines_pa.to_numpy(zero_copy_only=False)
-    stripped_np = stripped_pa.to_numpy(zero_copy_only=False)
+    return _Batch(
+        pdf, cfg, n_per, roles == "tool", was_enh,
+        lines_pa.to_numpy(zero_copy_only=False),
+        stripped_pa.to_numpy(zero_copy_only=False),
+        line_start, raw_len, s_len, lstr_len,
+        is_banner, is_footer, is_fence, cls_a, cls_b,
+    )
+
+
+def _page_stage(b: _Batch) -> _Batch:
+    """Batch-wide page assembly (segmented numpy; SPEC §§1-5): border
+    strip, fences, the agreement gate, table fusion, blank bridging,
+    bands, region runs and the header vote.
+
+    Pages average ~13 lines, so per-page Python/numpy dispatch
+    dominates when run page-at-a-time; instead every per-LINE pass
+    (border trim, fence toggles, agreement gate, band splits, region
+    runs) runs once over the flattened batch with per-page resets,
+    and Python touches only per-REGION lists (~spans/3 items)."""
+    cfg = b.cfg
+    n_per, tool_page, s_len, cls_b = b.n_per, b.tool_page, b.s_len, b.cls_b
+    P = len(n_per)
+    n = len(s_len)
+    offsets = np.zeros(P + 1, dtype=np.int64)
+    np.cumsum(n_per, out=offsets[1:])
     firsts = offsets[:-1]
-    tool_page = roles == "tool"
 
     page = np.repeat(np.arange(P, dtype=np.int64), n_per)
     rel = np.arange(n, dtype=np.int64) - np.repeat(firsts, n_per)
@@ -422,7 +429,7 @@ def _analyze_batch(
     for k in range(cfg.border_scan_lines):
         valid = (k < n_per) & ~found & ~tool_page
         idx = np.minimum(firsts + k, max(n - 1, 0))
-        hit = valid & (is_banner[idx] if n else False)
+        hit = valid & (b.is_banner[idx] if n else False)
         lo[hit] = k + 1
         found |= hit
     hi = n_per.astype(np.int64).copy()
@@ -432,14 +439,14 @@ def _analyze_batch(
         pos = fstart + k
         valid = (pos < n_per) & ~foundf & ~tool_page
         idx = np.minimum(firsts + pos, max(n - 1, 0))
-        hit = valid & (is_footer[idx] if n else False)
+        hit = valid & (b.is_footer[idx] if n else False)
         hi[hit] = pos[hit]
         foundf |= hit
 
     active = ~tool_page[page] & (rel >= lo[page]) & (rel < hi[page])
 
     # §3 fence toggle: per-page exclusive prefix parity of fence marks
-    fm = is_fence_marker & active
+    fm = b.is_fence & active
     excl_f = np.cumsum(fm) - fm
     base_f = np.zeros(P, dtype=np.int64)
     nz = n_per > 0
@@ -449,10 +456,10 @@ def _analyze_batch(
     # §4 agreement gate per page
     classifiable = active & ~fm & ~in_fence_before
     n_cl = np.bincount(page[classifiable], minlength=P)
-    agree = np.bincount(page[classifiable & (cls_a == cls_b)], minlength=P)
+    agree = np.bincount(page[classifiable & (b.cls_a == cls_b)], minlength=P)
     ratio = np.where(n_cl > 0, 100.0 * agree / np.maximum(n_cl, 1), 100.0)
     used_b = ratio <= cfg.binarize_retry_threshold
-    cls = np.where(used_b[page], cls_b, cls_a).astype(np.int8)
+    cls = np.where(used_b[page], cls_b, b.cls_a).astype(np.int8)
     cls[active & in_fence_before & ~fm] = C_TOOL
     cls[fm] = C_FENCE
 
@@ -532,8 +539,6 @@ def _analyze_batch(
         counts = np.bincount(rid[regline], minlength=len(starts))
     else:
         counts = np.zeros(0, dtype=np.int64)
-    r_lo = np.searchsorted(starts, offsets[:-1])
-    r_hi = np.searchsorted(starts, offsets[1:])
 
     # §5h per-region header majority vote (J8 analog,
     # utils/__init__.py:799-858): a short TEXT region whose MODEL-B
@@ -541,10 +546,8 @@ def _analyze_batch(
     # character mass reaches its text mass relabels to ONE header
     # region. Segment reductions over the region runs; the sentinel
     # pad keeps end == n a legal reduceat index.
-    if len(starts) and not cfg.full_layout:
-        reg_label = cls[starts]  # no-full-layout: vote disabled
-    elif len(starts):
-        reg_label = cls[starts]
+    reg_label = cls[starts]
+    if cfg.full_layout and len(starts):  # no-full-layout: vote disabled
         idx2v = np.empty(2 * len(starts), dtype=np.int64)
         idx2v[0::2] = starts
         idx2v[1::2] = starts + counts
@@ -561,118 +564,108 @@ def _analyze_batch(
             & (2 * hmass >= allmass)
         )
         reg_label[vote] = C_HEADER
-    else:
-        reg_label = np.zeros(0, dtype=np.int8)
 
-    # ---- §§6-10, one array engine: every text block gets its §6/§6d
-    # gutters in batched grids (_block_gutters). Pages without column
-    # structure — and tool pages, one pseudo-region of all nonblank
-    # lines — emit through _emit_fast; column pages (block gutters or
-    # §6p page columns) through _emit_cols; both finish in _emit_core.
+    return b._replace(
+        offsets=offsets, ratio=ratio, used_b=used_b, page=page, active=active,
+        cls=cls, band=band, starts=starts, counts=counts, r_page=page[starts],
+        reg_label=reg_label,
+    )
+
+
+def _emit_stage(b: _Batch) -> _Batch:
+    """SPEC §§6-10, one array engine: every text block gets its §6/§6d
+    gutters in batched grids (_block_gutters). Pages without column
+    structure — and tool pages, one pseudo-region of all nonblank
+    lines — emit through _emit_fast; column pages (block gutters or
+    §6p page columns) through _emit_cols; both finish in _emit_core."""
+    n_per, tool_page, page, starts, r_page, band = (
+        b.n_per, b.tool_page, b.page, b.starts, b.r_page, b.band
+    )
     parts = []
     page_cols: dict[int, tuple] = {}
-    r_page = page[starts]
-    gutter_cache = _block_gutters(
-        starts, counts, reg_label, r_page, tool_page,
-        lines_np, raw_len, lstr_len, cfg,
-    )
-    complex_page = np.zeros(P, dtype=bool)
+    gutter_cache = _block_gutters(b)
+    complex_page = np.zeros(len(n_per), dtype=bool)
     complex_page[page[np.fromiter(gutter_cache, np.int64, len(gutter_cache))]] = True
     rmask = ~complex_page[r_page] & ~tool_page[r_page]
     tp = np.flatnonzero(tool_page & (n_per > 0))
-    fr_start = np.concatenate([starts[rmask], firsts[tp]])
+    fr_start = np.concatenate([starts[rmask], b.offsets[tp]])
     if len(fr_start):
         parts.append(
             _emit_fast(
+                b,
                 fr_start,
-                np.concatenate([counts[rmask], n_per[tp]]),
-                np.concatenate([reg_label[rmask], np.full(len(tp), C_TOOL, np.int8)]),
+                np.concatenate([b.counts[rmask], n_per[tp]]),
+                np.concatenate([b.reg_label[rmask], np.full(len(tp), C_TOOL, np.int8)]),
                 np.concatenate([band[starts][rmask], np.zeros(len(tp), np.int64)]),
                 np.concatenate([r_page[rmask], tp]),
-                pdf, stripped_np, line_start + lstr_len, s_len, lstr_len, cfg,
             )
         )
     cplx = np.flatnonzero(complex_page)
     if len(cplx):
-        page_cols = _page_gutters(
-            complex_page, starts, counts, reg_label, r_page, lines_np, raw_len, cfg
-        )
+        page_cols = _page_gutters(b, complex_page)
         # §6p band recompute: on a page-column page a separator whose
         # ink sits inside ONE column (mother/child containment,
         # utils/__init__.py:213-297) no longer advances the band
         # counter for the later lines of its page
         if page_cols:
-            sep = np.flatnonzero(active & (cls == C_SEP))
+            band = band.copy()
+            sep = np.flatnonzero(b.active & (b.cls == C_SEP))
             sep = sep[np.isin(page[sep], np.fromiter(page_cols, np.int64, len(page_cols)))]
             for i in sep.tolist():
                 ends = page_cols[int(page[i])][2]
-                a = lstr_len[i]
-                if np.searchsorted(ends, a) == np.searchsorted(ends, a + s_len[i] - 1):
-                    band[i + 1 : offsets[page[i] + 1]] -= 1
-        parts.append(
-            _emit_cols(
-                cplx, r_lo, r_hi, starts, counts, reg_label, band,
-                lines_np, stripped_np, line_start, lstr_len, s_len, raw_len,
-                gutter_cache, page_cols, pdf, cfg,
-            )
-        )
-    parts = [p for p in parts if p is not None]
+                a = b.lstr_len[i]
+                if np.searchsorted(ends, a) == np.searchsorted(ends, a + b.s_len[i] - 1):
+                    band[i + 1 : b.offsets[page[i] + 1]] -= 1
+        parts.append(_emit_cols(b, cplx, band, gutter_cache, page_cols))
+    return b._replace(
+        parts=[p for p in parts if p is not None],
+        gutter_cache=gutter_cache,
+        page_cols=page_cols,
+    )
 
-    if want_diag:
-        # SPEC §11 from the engine's own arrays: span/region counts of
-        # the emitted spans, columns from the gutter caches, slope over
-        # the un-guttered text-block lines
-        n_spans = np.zeros(P, dtype=np.int64)
-        n_regions = np.zeros(P, dtype=np.int64)
-        for sp_page, f in parts:
-            n_spans += np.bincount(sp_page, minlength=P)
-            np.maximum.at(n_regions, sp_page, f["region_seq"].to_numpy() + 1)
-        max_cols = np.ones(P, dtype=np.int64)
-        for st, (_sh, _pr, g) in gutter_cache.items():
-            max_cols[page[st]] = max(max_cols[page[st]], len(g) + 1)
-        for p, (_w, g, _e) in page_cols.items():
-            max_cols[p] = len(g) + 1
-        plain_txt = (
-            (reg_label == C_TEXT)
-            & ~tool_page[r_page]
-            & ~np.isin(starts, np.fromiter(gutter_cache, np.int64, len(gutter_cache)))
-            & ~np.isin(r_page, np.fromiter(page_cols, np.int64, len(page_cols)))
-        )
-        slope = _page_slopes(
-            P, starts[plain_txt], counts[plain_txt], r_page[plain_txt], lstr_len
-        )
-        return pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].to_numpy(),
-                "turn_idx": pdf["turn_idx"].to_numpy(),
-                "n_lines": n_per,
-                "n_spans": n_spans,
-                "n_regions": n_regions,
-                "max_columns": max_cols,
-                "slope": slope,
-                "is_deskewed": np.abs(slope) >= cfg.slope_threshold,
-                "agreement_ratio": ratio,
-                "used_binarized": used_b & ~tool_page,
-                "was_enhanced": was_enh,
-            }
-        )
-    frames = [f for _p, f in parts]
-    if as_frames:
-        return frames
-    if not frames:
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Series([], dtype="object"),
-                "turn_idx": pd.Series([], dtype="int64"),
-                "span_idx": pd.Series([], dtype="int64"),
-                "region_type": pd.Series([], dtype="object"),
-                "region_seq": pd.Series([], dtype="int64"),
-                "char_start": pd.Series([], dtype="int64"),
-                "char_end": pd.Series([], dtype="int64"),
-                "text": pd.Series([], dtype="object"),
-            }
-        )
-    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+def _diag_stage(b: _Batch) -> pd.DataFrame:
+    """SPEC §11 from the engine's own arrays: span/region counts of
+    the emitted spans, columns from the gutter caches, slope over the
+    un-guttered text-block lines."""
+    P = len(b.n_per)
+    starts, r_page, gutter_cache, page_cols = (
+        b.starts, b.r_page, b.gutter_cache, b.page_cols
+    )
+    n_spans = np.zeros(P, dtype=np.int64)
+    n_regions = np.zeros(P, dtype=np.int64)
+    for sp_page, f in b.parts:
+        n_spans += np.bincount(sp_page, minlength=P)
+        np.maximum.at(n_regions, sp_page, f["region_seq"].to_numpy() + 1)
+    max_cols = np.ones(P, dtype=np.int64)
+    for st, (_sh, _pr, g) in gutter_cache.items():
+        max_cols[b.page[st]] = max(max_cols[b.page[st]], len(g) + 1)
+    for p, (_w, g, _e) in page_cols.items():
+        max_cols[p] = len(g) + 1
+    plain_txt = (
+        (b.reg_label == C_TEXT)
+        & ~b.tool_page[r_page]
+        & ~np.isin(starts, np.fromiter(gutter_cache, np.int64, len(gutter_cache)))
+        & ~np.isin(r_page, np.fromiter(page_cols, np.int64, len(page_cols)))
+    )
+    slope = _page_slopes(
+        P, starts[plain_txt], b.counts[plain_txt], r_page[plain_txt], b.lstr_len
+    )
+    return pd.DataFrame(
+        {
+            "conv_id": b.pdf["conv_id"].to_numpy(),
+            "turn_idx": b.pdf["turn_idx"].to_numpy(),
+            "n_lines": b.n_per,
+            "n_spans": n_spans,
+            "n_regions": n_regions,
+            "max_columns": max_cols,
+            "slope": slope,
+            "is_deskewed": np.abs(slope) >= b.cfg.slope_threshold,
+            "agreement_ratio": b.ratio,
+            "used_binarized": b.used_b & ~b.tool_page,
+            "was_enhanced": b.was_enh,
+        }
+    )
 
 
 # cells (rows x widest line) per chunk of blocks or pages: bounds the
@@ -720,9 +713,7 @@ def _is_text(codes):
     return ~_WS_LUT[np.where(codes <= 0x3000, codes, 0)]
 
 
-def _block_gutters(
-    starts, counts, reg_label, r_page, tool_page, lines_np, raw_len, lstr_len, cfg
-):
+def _block_gutters(b: _Batch):
     """SPEC §6/§6d for every text block of >= min_block_lines lines on
     a non-tool page: the LS-slope gate, the shear-grid deskew of skewed
     blocks, and the valley gutters of the sheared (deskew found a
@@ -732,17 +723,18 @@ def _block_gutters(
     valley machinery.
     Returns {first_line: (shifts, sheared_profile, gutters)} for the
     blocks WITH gutters (shifts/profile None when unsheared)."""
+    cfg, lines_np, raw_len, lstr_len = b.cfg, b.lines_np, b.raw_len, b.lstr_len
     out: dict[int, tuple] = {}
     eligible = np.flatnonzero(
-        (reg_label == C_TEXT)
-        & (counts >= cfg.min_block_lines)
-        & ~tool_page[r_page]
+        (b.reg_label == C_TEXT)
+        & (b.counts >= cfg.min_block_lines)
+        & ~b.tool_page[b.r_page]
     )
     if not len(eligible):
         return out
     n = len(raw_len)
-    st_e = starts[eligible].astype(np.int64)
-    cn_e = counts[eligible].astype(np.int64)
+    st_e = b.starts[eligible].astype(np.int64)
+    cn_e = b.counts[eligible].astype(np.int64)
     # segment reductions over [start, start+count) pairs; the sentinel
     # pad keeps end == n a legal reduceat index
     idx2 = np.empty(2 * len(st_e), dtype=np.int64)
@@ -799,7 +791,7 @@ def _block_gutters(
             nz_lo = np.searchsorted(blk_nz, sk_jj)
             nz_hi = np.searchsorted(blk_nz, sk_jj + 1)
             specs = []
-            for jj, a, b in zip(sk_jj.tolist(), nz_lo.tolist(), nz_hi.tolist()):
+            for jj, a, e in zip(sk_jj.tolist(), nz_lo.tolist(), nz_hi.tolist()):
                 j = int(sel[jj])
                 rf = int(reg_first[jj])
                 ab = exact_ab.get(j)
@@ -807,7 +799,7 @@ def _block_gutters(
                     ab = (int(A_e[j]), int(B_e[j]))
                 specs.append(
                     (ab[0], ab[1], lens_li[rf : rf + int(cn_s[jj])],
-                     rows_nz[a:b] - rf, cols_nz[a:b])
+                     rows_nz[a:e] - rf, cols_nz[a:e])
                 )
             sheared = []
             for jj, res in zip(sk_jj.tolist(), _choose_shear_batch(specs, cfg)):
@@ -830,23 +822,22 @@ def _block_gutters(
     return out
 
 
-def _page_gutters(
-    complex_page, starts, counts, reg_label, r_page, lines_np, raw_len, cfg
-):
+def _page_gutters(b: _Batch, complex_page):
     """SPEC §6p: a column page with >= 2 text blocks detects page
     columns over the UNION ink profile of all its text-block lines.
     Pages run width-sorted in _cell_chunks, one page-slot bincount and
     one _select_gutters_batch per chunk. Returns
     {page: (page_width, gutters, gutter_ends)} for the pages whose
     union profile has gutters — the page-column mode pages."""
+    cfg, raw_len, r_page = b.cfg, b.raw_len, b.r_page
     out: dict[int, tuple] = {}
-    txt = np.flatnonzero((reg_label == C_TEXT) & complex_page[r_page])
+    txt = np.flatnonzero((b.reg_label == C_TEXT) & complex_page[r_page])
     ntb = np.bincount(r_page[txt], minlength=len(complex_page))
     txt = txt[ntb[r_page[txt]] >= 2]
     if not len(txt):
         return out
-    st_r = starts[txt].astype(np.int64)
-    cn_r = counts[txt].astype(np.int64)
+    st_r = b.starts[txt].astype(np.int64)
+    cn_r = b.counts[txt].astype(np.int64)
     pg_r = r_page[txt]  # ascending: regions follow line order
     idx2 = np.empty(2 * len(st_r), dtype=np.int64)
     idx2[0::2] = st_r
@@ -865,7 +856,7 @@ def _page_gutters(
         li = np.repeat(st_s - reg_first, cn_s) + np.arange(
             int(cn_s.sum()), dtype=np.int64
         )
-        rows_nz, cols_nz = _char_cells(lines_np[li], raw_len[li], _is_ink)
+        rows_nz, cols_nz = _char_cells(b.lines_np[li], raw_len[li], _is_ink)
         pslot = np.repeat(np.searchsorted(slot_pages, pg_r[keep]), cn_s)
         pw_s = pw[np.searchsorted(upage, slot_pages)]
         W = int(pw_s.max())
@@ -1116,10 +1107,7 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
     )
 
 
-def _emit_fast(
-    fr_start, fr_count, fr_label, fr_band, fr_page,
-    pdf, strp_np, cstart, s_len, lead, cfg,
-):
+def _emit_fast(b: _Batch, fr_start, fr_count, fr_label, fr_band, fr_page):
     """Array-native span emission for column-free regions: sort regions
     by (page, band, type-group, first_line), derive one span per
     non-blank line, hand off to the shared ``_emit_core`` engine."""
@@ -1136,26 +1124,23 @@ def _emit_fast(
     reg_first = np.cumsum(cn) - cn
     line_ids = np.repeat(st - reg_first, cn) + np.arange(total, dtype=np.int64)
     reg_of_line = np.repeat(np.arange(len(st), dtype=np.int64), cn)
-    keep = s_len[line_ids] > 0
+    keep = b.s_len[line_ids] > 0
     li = line_ids[keep]
     rl = reg_of_line[keep]
     if len(li) == 0:
         return None
-    cs = cstart[li]
-    spn = s_len[li].copy()
+    lead = b.lstr_len[li]
+    cs = b.line_start[li] + lead
+    spn = b.s_len[li]
     return _emit_core(
         lb, pg, bd, rl,
-        cs.copy(), cs + spn, strp_np[li], spn,
-        lead[li], lead[li] + spn,
-        pdf, cfg,
+        cs, cs + spn, b.stripped_np[li], spn,
+        lead, lead + spn,
+        b.pdf, b.cfg,
     )
 
 
-def _emit_cols(
-    pages, r_lo, r_hi, starts, counts, r_label, band,
-    lines_np, stripped_np, line_start, lstr_len, s_len, raw_len,
-    gutter_cache, page_cols, pdf, cfg,
-):
+def _emit_cols(b: _Batch, pages, band, gutter_cache, page_cols):
     """Array-native span emission for COLUMN pages (SPEC §6 column
     split, §6p page columns, §6m marginalia, §§7-10).
 
@@ -1171,18 +1156,22 @@ def _emit_cols(
     by (page, band, type-group, first, col) — (page, col, band,
     type-group, first) on page-column pages — and finishes in the
     shared ``_emit_core`` engine."""
+    cfg, lines_np, line_start = b.cfg, b.lines_np, b.line_start
+    s_len, lstr_len, raw_len = b.s_len, b.lstr_len, b.raw_len
     K = 1 + int(raw_len.max()) if len(raw_len) else 1
 
     # --- region tables: plain regions (one row) vs guttered text ---
     rg_lab, rg_bd, rg_first, rg_col, rg_pg = [], [], [], [], []
     a_start, a_count = [], []  # plain regions, parallel to their rows
     gregs = []  # (start, count, shifts, gutters, w, band, page)
-    for t in pages.tolist():
+    r_lo = np.searchsorted(b.starts, b.offsets[pages])
+    r_hi = np.searchsorted(b.starts, b.offsets[pages + 1])
+    for t, r_lo_t, r_hi_t in zip(pages.tolist(), r_lo.tolist(), r_hi.tolist()):
         pc_ = page_cols.get(t)
-        for r in range(r_lo[t], r_hi[t]):
-            st_r = int(starts[r])
-            cn_r = int(counts[r])
-            lab = int(r_label[r])
+        for r in range(r_lo_t, r_hi_t):
+            st_r = int(b.starts[r])
+            cn_r = int(b.counts[r])
+            lab = int(b.reg_label[r])
             bd_r = int(band[st_r])
             col = 0
             if pc_ is not None:
@@ -1335,7 +1324,7 @@ def _emit_cols(
         rlA = new_of_old[rowA[keepA]]  # plain rows are ids 0..nA-1
         c0 = line_start[ids] + lstr_len[ids]
         lnA = s_len[ids]
-        csA_, ceA_, txA_ = c0, c0 + lnA, stripped_np[ids]
+        csA_, ceA_, txA_ = c0, c0 + lnA, b.stripped_np[ids]
         caA_, cbA_ = lstr_len[ids], lstr_len[ids] + lnA
     else:
         z = np.zeros(0, dtype=np.int64)
@@ -1360,7 +1349,7 @@ def _emit_cols(
         lb0[order], pg0[order], bd0[order],
         sp_rl[sorder], sp_cs[sorder].copy(), sp_ce[sorder].copy(),
         sp_tx[sorder], sp_ln[sorder].copy(), sp_ca[sorder], sp_cb[sorder],
-        pdf, cfg,
+        b.pdf, cfg,
     )
 
 

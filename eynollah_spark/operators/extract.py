@@ -114,16 +114,25 @@ def _bc_key(bc_cfg):
         return ("obj", id(bc_cfg), getattr(bc_cfg, "id", None))
 
 
+def _cached_model(key, bc_cfg):
+    """The executor's LineModel for one broadcast config (key from
+    ``_bc_key``), built on first use."""
+    from eynollah_spark.kernel.textpage import LineModel
+
+    if key not in _MODEL_CACHE:
+        _MODEL_CACHE[key] = LineModel(
+            bc_cfg.value if bc_cfg is not None else DEFAULT_CONFIG
+        )
+    return _MODEL_CACHE[key]
+
+
 def _kernel_iter(bc_cfg, metrics=None):
     key = _bc_key(bc_cfg)  # captured in the task closure
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from eynollah_spark.kernel.textpage import LineModel, analyze_turns_frames
+        from eynollah_spark.kernel.textpage import analyze_turns_frames
 
-        model = _MODEL_CACHE.get(key)
-        if model is None:
-            model = LineModel(bc_cfg.value if bc_cfg is not None else DEFAULT_CONFIG)
-            _MODEL_CACHE[key] = model
+        model = _cached_model(key, bc_cfg)
         for pdf in batches:
             # column-free and column-page frames yield separately (no
             # pandas concat/consolidation); downstream windows impose order
@@ -141,12 +150,9 @@ def _diag_iter(bc_cfg):
     key = _bc_key(bc_cfg)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from eynollah_spark.kernel.textpage import LineModel, page_diags_batch
+        from eynollah_spark.kernel.textpage import page_diags_batch
 
-        model = _MODEL_CACHE.get(key)
-        if model is None:
-            model = LineModel(bc_cfg.value if bc_cfg is not None else DEFAULT_CONFIG)
-            _MODEL_CACHE[key] = model
+        model = _cached_model(key, bc_cfg)
         for pdf in batches:
             yield page_diags_batch(pdf, model)
 

@@ -28,6 +28,7 @@ from eynollah_spark.config import (
     RT_TEXT,
     RT_TOOL,
     SEP_CHARS,
+    SEP_MIN_LEN,
 )
 
 
@@ -87,7 +88,7 @@ def classify_line_naive(line: str, cfg: ExtractConfig) -> str:
     s = line.strip()
     if s == "":
         return "blank"
-    if len(s) >= cfg.separator_min_len and all(c in SEP_CHARS for c in s):
+    if len(s) >= SEP_MIN_LEN and all(c in SEP_CHARS for c in s):
         return "separator"
     if s.startswith("[note:") and s.endswith("]"):
         return "marginalia"

@@ -5,13 +5,17 @@ Model of the reference's test granularity (tests/test_counter.py etc.)
 plus property-based fuzzing the reference lacks.
 """
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from eynollah_spark.config import DEFAULT_CONFIG
+from eynollah_spark.config import DEFAULT_CONFIG, SEP_CHARS, SEP_MIN_LEN
 from eynollah_spark.fixtures.transcripts import CorpusSpec, generate_local
 from eynollah_spark.kernel.textpage import (
+    C_HEADER,
+    C_TEXT,
     LineModel,
     analyze_turns_batch,
     page_diags_batch,
@@ -149,15 +153,81 @@ def test_fuzz_agreement_all_modes(text, role):
     assert got == want, repr(text)
 
 
+class _ParagraphHead(LineModel):
+    """Toy contextual head: a text line that opens a paragraph (the
+    array's first line, or one after a blank line) is a header, so a
+    line's label depends on the line before it."""
+
+    context_window = 1
+
+    def classify_arrow(self, stripped_pa, s_len):
+        out = super().classify_arrow(stripped_pa, s_len)
+        opens = np.concatenate(([True], s_len[:-1] == 0)) & (out == C_TEXT)
+        out[opens] = C_HEADER
+        return out
+
+
 def test_patch_stitching_equals_whole():
-    """do_prediction graft (eynollah.py:522-639): patched classification
-    with margin stitching must equal unpatched on long pages."""
+    """do_prediction graft (eynollah.py:522-639): a contextual head run
+    patch-wise with margin stitching must equal its whole-array labels
+    on a page longer than two patches."""
+    cfg = DEFAULT_CONFIG
     df = generate_local(CorpusSpec(n_convs=6, seed=3))
-    big = "\n".join(df["text"].tolist())  # one very long page
-    model = LineModel(DEFAULT_CONFIG)
-    s = pd.Series(big.split("\n")).str.strip()
-    assert (model.classify_patched(s) == model.classify_stripped(s)).all()
-    assert len(s) > DEFAULT_CONFIG.patch_lines * 2
+    lines = [ln.strip() for ln in "\n".join(df["text"]).split("\n")]
+    assert len(lines) > 2 * cfg.patch_lines
+    arr = pa.array(lines, type=pa.string())
+    s_len = np.array([len(ln) for ln in lines], dtype=np.int64)
+    model = _ParagraphHead(cfg)
+    whole = model.classify_arrow(arr, s_len)
+    assert (model.classify_patched(arr, s_len) == whole).all()
+    # a patch's first row has no context inside the patch; on this page
+    # some such row is labelled differently than in the whole array, so
+    # a stitch that also wrote the margin rows would fail the check above
+    step = cfg.patch_lines - 2 * cfg.patch_margin
+    assert any(
+        model.classify_arrow(arr.slice(lo, 1), s_len[lo : lo + 1])[0] != whole[lo]
+        for lo in range(step - cfg.patch_margin, len(lines), step)
+    )
+
+
+class _ContextualRules(LineModel):
+    """The rule head declared contextual: it runs through the patch
+    loop, and model B re-classifies every line."""
+
+    context_window = 1
+
+
+@pytest.mark.parametrize("cfg_name", ["default", "all_modes"])
+def test_contextual_rule_head_matches_default(cfg_name):
+    """The rule head's labels are per-line, so running it as a
+    contextual model (patched, model B over all lines) must give the
+    default model's spans and page diagnostics exactly."""
+    cfg = DEFAULT_CONFIG if cfg_name == "default" else _fuzz_cfg()
+    df = generate_local(CorpusSpec(n_convs=60, seed=3))
+    pdf = df[["conv_id", "turn_idx", "role", "text"]].reset_index(drop=True)
+    plain, ctx = LineModel(cfg), _ContextualRules(cfg)
+    pd.testing.assert_frame_equal(
+        analyze_turns_batch(pdf, ctx), analyze_turns_batch(pdf, plain), check_exact=True
+    )
+    diags = page_diags_batch(pdf, plain)
+    pd.testing.assert_frame_equal(page_diags_batch(pdf, ctx), diags, check_exact=True)
+    # some pages hold non-ASCII lines and take the binarized retry
+    assert diags["used_binarized"].any()
+
+
+def test_separator_min_len_kernel_matches_oracle():
+    """A rule of SEP_MIN_LEN separator chars is a separator region and
+    one char shorter is not, in the kernel and the oracle alike."""
+    texts = [
+        f"intro line here\n{ch * k}\nafter text"
+        for ch in sorted(SEP_CHARS)
+        for k in (SEP_MIN_LEN - 1, SEP_MIN_LEN)
+    ]
+    got = _kernel_spans([(t, "user") for t in texts])
+    for t, g in zip(texts, got):
+        assert g == _oracle_spans(t, "user")
+    has_sep = [any(sp[1] == "separator" for sp in g) for g in got]
+    assert has_sep == [False, True] * len(SEP_CHARS)
 
 
 def test_smoothed_gutter_survives_stray_chars():
