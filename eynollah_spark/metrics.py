@@ -9,9 +9,13 @@ Two complementary mechanisms:
 
 - **job-level accumulators** (`ExtractMetrics`): cheap, updated inside
   the kernel's Arrow batches, readable on the driver after any action;
+  at-least-once, so a retried task counts its batches twice;
 - **per-partition metrics rows** (`partition_metrics`): a DataFrame
-  computed relationally from the spans output — survives into the
-  metrics table next to the checkpoint manifest (FIXTURES.md §3).
+  computed relationally from the spans output, in the shape of the
+  metrics table of FIXTURES.md §3. Nothing in `jobs/` writes that
+  table yet.
+
+`bytes_parsed` counts UTF-8 bytes of `text`, not characters.
 """
 
 from __future__ import annotations
@@ -57,7 +61,7 @@ def partition_metrics(spans: DataFrame, run_id: str) -> DataFrame:
         .agg(
             F.count_distinct("conv_id", "turn_idx").alias("turns_out"),
             F.count(F.lit(1)).alias("spans_emitted"),
-            F.sum(F.length("text")).alias("bytes_parsed"),
+            F.sum(F.octet_length("text")).alias("bytes_parsed"),
         )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("committed_at", F.current_timestamp())

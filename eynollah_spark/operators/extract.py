@@ -18,7 +18,8 @@ restored by keys, never by arrival order.
 
 Scale notes (100 TB / 10^12 turns):
 - kernel stage: linear scan, no exchange; Arrow batch size bounds
-  executor memory; per-partition metrics via accumulators.
+  executor memory; job-level counters via accumulators (at-least-once:
+  a retried task adds its batches again).
 - window stage: hash-partitioned by conv_id; a 10^6-turn conversation
   is ~10^7 span rows in one partition — handled by Spark's external
   sort, no driver involvement. For pathological cases the salted
@@ -39,6 +40,8 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
@@ -139,7 +142,8 @@ def _kernel_iter(bc_cfg, metrics=None):
             frames = analyze_turns_frames(pdf, model)
             if metrics is not None:
                 metrics["turns_in"].add(len(pdf))
-                metrics["bytes_parsed"].add(int(pdf["text"].str.len().fillna(0).sum()))
+                text = pa.array(pdf["text"].to_numpy(), type=pa.string(), from_pandas=True)
+                metrics["bytes_parsed"].add(pc.sum(pc.binary_length(text)).as_py() or 0)
                 metrics["spans_emitted"].add(sum(len(f) for f in frames))
             yield from frames
 

@@ -7,10 +7,11 @@
         --output /path/spans --buckets 64 [--salted] [--resume]
 
 Flow (north rule): scan transcripts -> Arrow layout kernel (narrow) ->
-conv_id ordering windows (one exchange) -> bucketed resumable sink
-with per-partition lineage + counters. With --resume, buckets already
-committed by a previous run are skipped (anti-join on the manifest)
-and only pending work executes — restart-safe, no duplicates.
+conv_id ordering windows (one exchange) -> bucketed resumable sink,
+with job-level counters in the printed JSON. With --resume, buckets
+already committed by a previous run are skipped (anti-join on the
+manifest) and only pending work executes — restart-safe, no
+duplicates.
 """
 
 from __future__ import annotations
@@ -19,7 +20,8 @@ import argparse
 import json
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """The job's options; ``argv=None`` reads ``sys.argv``."""
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="transcripts parquet/iceberg path")
     ap.add_argument("--output", required=True, help="span sink root")
@@ -49,15 +51,17 @@ def main() -> None:
         "--no-full-layout mode)",
     )
     ap.add_argument("--run-id", default="run0")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
+
+def run(spark, args: argparse.Namespace) -> dict:
+    """One extraction pass on ``spark``: scan -> kernel -> windows ->
+    sink. Returns the dict the job prints."""
     from eynollah_spark.config import ExtractConfig
     from eynollah_spark.io.sinks import BucketedSpanSink, filter_pending_turns
     from eynollah_spark.metrics import ExtractMetrics
     from eynollah_spark.operators.extract import extract_spans, extract_spans_salted
-    from eynollah_spark.session import get_spark
 
-    spark = get_spark(app_name=f"eynollah-extract-{args.run_id}")
     cfg = ExtractConfig(
         enable_tables=args.tables,
         enable_line_split=args.line_split,
@@ -79,16 +83,19 @@ def main() -> None:
         spans = extract_spans(turns, cfg, metrics=metrics)
 
     committed = sink.write(spans)
+    return {
+        "run_id": args.run_id,
+        "buckets_committed": committed,
+        "counters": metrics.snapshot(),
+    }
 
-    print(
-        json.dumps(
-            {
-                "run_id": args.run_id,
-                "buckets_committed": committed,
-                "counters": metrics.snapshot(),
-            }
-        )
-    )
+
+def main(argv: list[str] | None = None) -> None:
+    from eynollah_spark.session import get_spark
+
+    args = parse_args(argv)
+    spark = get_spark(app_name=f"eynollah-extract-{args.run_id}")
+    print(json.dumps(run(spark, args)))
     spark.stop()
 
 

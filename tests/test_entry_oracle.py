@@ -138,6 +138,14 @@ def test_every_query_has_entry_or_rows_only(spark):
         assert df.count() >= 0, name
 
 
+def test_bench_queries_exist():
+    """bench.py times its operator queries by name; a renamed or removed
+    query must fail here, not in a bench run."""
+    import bench
+
+    assert set(bench.BENCH_QUERIES) <= set(entrymod.queries())
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.limit(5).collect()

@@ -57,7 +57,10 @@ def test_accumulator_metrics(spark):
     snap = m.snapshot()
     assert snap["turns_in"] == len(local)
     assert snap["spans_emitted"] == n_spans
-    assert snap["bytes_parsed"] == int(local["text"].str.len().sum())
+    # UTF-8 bytes, not characters: the corpus has non-ASCII turns
+    n_bytes = int(local["text"].str.encode("utf-8").str.len().sum())
+    assert n_bytes > int(local["text"].str.len().sum())
+    assert snap["bytes_parsed"] == n_bytes
 
 
 def test_partition_metrics_table(spark):
@@ -66,6 +69,8 @@ def test_partition_metrics_table(spark):
     spans = extract_spans(turns)
     pm = partition_metrics(spans, run_id="t1").toPandas()
     assert pm["spans_emitted"].sum() == spans.count()
+    text = spans.select("text").toPandas()["text"]
+    assert pm["bytes_parsed"].sum() == text.str.encode("utf-8").str.len().sum()
     assert set(pm.columns) >= {
         "run_id",
         "partition_id",
@@ -160,6 +165,27 @@ def test_iceberg_span_sink_commit_semantics(spark, tmp_path):
     assert sorted(committed) == [0, 1, 2, 3]
     assert sink.write(df) == []  # all buckets committed -> no-op
     assert sink.read().count() == 20
+
+
+def test_extract_job_run(spark, tmp_path):
+    """extract_job.run with default flags commits every bucket and
+    writes what extract_spans gives; --salted writes the same rows; a
+    --resume run over a finished output commits nothing."""
+    from jobs.extract_job import parse_args, run
+
+    inp = str(tmp_path / "turns")
+    spark.createDataFrame(generate_local(SPEC), schema=TRANSCRIPT_SCHEMA).write.parquet(inp)
+    want = extract_spans(spark.read.parquet(inp))
+    for flags in ([], ["--salted"]):
+        out = str(tmp_path / f"spans{len(flags)}")
+        args = parse_args(["--input", inp, "--output", out, *flags])
+        printed = run(spark, args)
+        assert sorted(printed["buckets_committed"]) == list(range(64))
+        got = BucketedSpanSink(out, n_buckets=64, run_tag=args.run_id).read(spark)
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+    resumed = run(spark, parse_args(["--input", inp, "--output", out, "--resume"]))
+    assert resumed["buckets_committed"] == []
 
 
 def test_crash_injected_mid_commit_resume_byte_identical(spark, tmp_path):
