@@ -41,6 +41,38 @@ BENCH_QUERIES = (
 )
 
 
+def job_session(app_name: str, cpus: int):
+    """The extraction job's own session (``get_spark`` defaults, as
+    ``jobs/extract_job.py``'s ``main`` starts it) at local[cpus], with
+    1 GB of heap per core: in local mode the driver heap is the whole
+    executor memory, and cores stand in for executors, so memory grows
+    with them. On the 1 GB default, a pass over
+    ``CorpusSpec(n_convs=20000, seed=1)`` at local[4] runs out of heap
+    in the window stage's spills."""
+    from eynollah_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=app_name,
+        master=f"local[{cpus}]",
+        extra_conf={"spark.driver.memory": f"{cpus}g"},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def split_by_file(spark, corpus: str) -> None:
+    """Read ``corpus`` as one input split per parquet file, the way
+    perfbench sizes its splits (maxPartitionBytes = the largest file),
+    so the file count the corpus was written with is the kernel
+    stage's task count. Raises unless splits == files."""
+    files = [f for f in os.listdir(corpus) if f.endswith(".parquet")]
+    largest = max(os.path.getsize(os.path.join(corpus, f)) for f in files)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(largest))
+    splits = spark.read.parquet(corpus).rdd.getNumPartitions()
+    if splits != len(files):
+        raise RuntimeError(f"{splits} input splits for {len(files)} files")
+
+
 def time_job(spark, corpus: str, work: str) -> tuple[float, int]:
     """Wall seconds of one extract_job ``run`` over ``corpus`` into a
     fresh directory under ``work``, and the span rows it committed
@@ -71,21 +103,7 @@ def main() -> None:
     except ValueError:
         sf = 0.1
 
-    from eynollah_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="eynollah-spark-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={
-            # local corpora are tiny; shrink splits so scans parallelize
-            # across all cores (production defaults are right at scale)
-            "spark.sql.files.maxPartitionBytes": str(512 * 1024),
-            "spark.sql.files.openCostInBytes": str(64 * 1024),
-            "spark.sql.execution.arrow.maxRecordsPerBatch": str(32768),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = job_session("eynollah-spark-bench", cpus)
 
     import __spark_entry__ as entrymod
     from eynollah_spark.fixtures.transcripts import CorpusSpec, generate_spark
@@ -99,6 +117,7 @@ def main() -> None:
         spec = CorpusSpec(n_convs=max(int(200000 * sf), 50))
         generate_spark(spark, spec, parallelism=cpus * 2).write.parquet(corpus)
         n_turns = spark.read.parquet(corpus).count()
+        split_by_file(spark, corpus)
 
         # two untimed passes first: the first extraction pays JIT +
         # codegen + Arrow-batch allocator warmup, and one pass still
@@ -114,6 +133,8 @@ def main() -> None:
             extract_runs.append(round(wall, 3))
     extract_s = min(extract_runs)
     timings["extract_spans"] = extract_s
+    # the split size was the corpus's; the operator suite scans on defaults
+    spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
     # --- operator suite over the driver testdata ---
     # a noop write computes every output column, where count() lets

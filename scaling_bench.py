@@ -7,8 +7,10 @@ efficiency = (turns/s at 4N / turns/s at N) / 4.
 
 Each level runs in a fresh interpreter: the py4j JVM outlives a
 SparkSession inside one Python process, so a level's JVM must not be
-the one an earlier level warmed. The corpus lives in a temporary
-directory removed on exit.
+the one an earlier level warmed, and its heap (1 GB per core,
+``bench.job_session``) is fixed when the JVM starts. The corpus is
+two parquet files per core at 4N, read one split per file, and lives
+in a temporary directory removed on exit.
 
 Usage: python scaling_bench.py
 Prints one JSON line.
@@ -26,34 +28,38 @@ from concurrent.futures import ProcessPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-CONVS = 5000   # CorpusSpec(seed=1): 84,594 turns
+# CorpusSpec(seed=1) conversations: 337,362 turns, ~3.5 min on 4 cores.
+# Costs per pass that do not shrink with cores weigh more on a short
+# pass, so the reading climbs with corpus size until they are small.
+# On a 4-core host (one to three runs per size): 5,000 convs 0.673 /
+# 0.673; 20,000 0.708 / 0.749 / 0.753; 40,000 0.777 / 0.695; 80,000
+# 0.771. From 20,000 up, the size moves the reading less than two runs
+# of one size differ.
+CONVS = 20000
 WARMUP = 2     # untimed passes per level (JIT, codegen, Python workers)
 SAMPLES = 3    # timed passes per level; the level reports their median
 TARGET = 0.8
 
 
-def _session(cpus: int):
-    from eynollah_spark.session import get_spark
-
-    spark = get_spark(app_name=f"eynollah-scaling-{cpus}", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def _write_corpus(cpus: int, path: str) -> None:
+    """The corpus as 2 * cpus parquet files: two kernel tasks per core
+    at the large level, as perfbench writes its corpora."""
+    from bench import job_session
     from eynollah_spark.fixtures.transcripts import CorpusSpec, generate_spark
 
-    spark = _session(cpus)
-    generate_spark(spark, CorpusSpec(n_convs=CONVS, seed=1)).write.parquet(path)
+    spark = job_session("eynollah-scaling-corpus", cpus)
+    spec = CorpusSpec(n_convs=CONVS, seed=1)
+    generate_spark(spark, spec, parallelism=2 * cpus).write.parquet(path)
     spark.stop()
 
 
 def _level(cpus: int, corpus: str, work: str) -> tuple[dict, list[float]]:
     """The level's summary at local[cpus] and its turns/s samples."""
-    from bench import time_job
+    from bench import job_session, split_by_file, time_job
 
-    spark = _session(cpus)
+    spark = job_session(f"eynollah-scaling-{cpus}", cpus)
     n_turns = spark.read.parquet(corpus).count()
+    split_by_file(spark, corpus)
     for _ in range(WARMUP):
         time_job(spark, corpus, work)
     runs = [time_job(spark, corpus, work) for _ in range(SAMPLES)]
