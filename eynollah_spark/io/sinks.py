@@ -39,9 +39,10 @@ parquet with an explicit manifest directory:
   floor at 1 byte (``_MIN_PARTITION_SIZE``), so the skewed bucket's
   task holds only its own bucket. At production sizes every bucket is
   far above 1 MiB and the floor never fires either way;
-- `resume()` anti-joins the buckets already marked done (the
-  "anti-join processed partitions on restart" from SURVEY §2.9/O14)
-  and processes only the remainder. The bucket map and count are
+- `write()` skips the buckets already marked done (the "anti-join
+  processed partitions on restart" from SURVEY §2.9/O14) and writes
+  only the remainder; `filter_pending_turns` prunes the done
+  conversations before the kernel runs. The bucket map and count are
   recorded in ``_layout`` before the job runs, and a sink whose
   markers were written under another map or count refuses to resume
   (``done_buckets`` raises) rather than drop or duplicate
@@ -182,13 +183,6 @@ class BucketedSpanSink:
             self._mark_done(b)
         return todo
 
-    def resume(self, spans: DataFrame) -> list[int]:
-        """Finish an interrupted run: writes only not-yet-committed
-        buckets. The input filter is pushed to the kernel's upstream via
-        the bucket predicate, so already-done conversations are not even
-        re-extracted when called on the raw turns pipeline."""
-        return self.write(spans)
-
     # --- read -------------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
         done = sorted(self.done_buckets())
@@ -229,7 +223,7 @@ def iceberg_catalog(spark: SparkSession) -> str | None:
 
 class IcebergSpanSink:
     """The production twin of ``BucketedSpanSink`` on a real Iceberg
-    catalog: same API (write/resume/read/done_buckets), same commit
+    catalog: same API (write/read/done_buckets), same commit
     unit (a conv_id-hash bucket), but the data commit is an Iceberg
     ``overwritePartitions`` (atomic snapshot, replaces exactly the
     pending buckets' partitions) and the manifest is a companion
@@ -283,12 +277,9 @@ class IcebergSpanSink:
         ).writeTo(self.manifest_table).append()
         return todo
 
-    def resume(self, spans: DataFrame) -> list[int]:
-        return self.write(spans)
-
-    def read(self) -> DataFrame:
+    def read(self, spark: SparkSession) -> DataFrame:
         done = sorted(self.done_buckets())
-        return self.spark.table(self.table).filter(
+        return spark.table(self.table).filter(
             F.col("_bucket").isin([int(b) for b in done])
         )
 
@@ -308,6 +299,12 @@ def filter_pending_turns(turns: DataFrame, sink: BucketedSpanSink) -> DataFrame:
     """Prune already-committed conversations BEFORE the kernel runs —
     the restart path reads/extracts only pending buckets (partition
     pruning analog; at scale this predicate prunes Iceberg manifests).
+
+    This is the only pruning ahead of the kernel: the bucket filter a
+    sink's ``write`` adds to ``extract_spans(turns)`` sits above the
+    kernel's ``MapInPandas`` in the optimized plan, so without this
+    filter every turn is extracted again and the done buckets' spans
+    are dropped only at the write.
     """
     done = sink.done_buckets()
     if not done:

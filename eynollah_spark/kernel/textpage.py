@@ -6,8 +6,9 @@ profiles) is done with Arrow/numpy vectorized ops across the
 *flattened line array of the whole batch* (``_line_stage``). Page
 assembly (SPEC §§1-5, ``_page_stage``) runs as segmented numpy with
 per-page resets, and SPEC §§6-10 run in one array engine
-(``_emit_stage``): batched gutter/deskew grids, the column split, and
-``_emit_core`` for reading order, merges and emission. Page
+(``_emit_stage``): batched gutter/deskew grids, then one region table
+for every page of the batch (``_emit_regions``: the column split and
+reading order) and ``_emit_core`` for merges and emission. Page
 diagnostics (§11, ``_diag_stage``) are read off that engine's arrays;
 ``oracle/reference.py`` is the independent per-page implementation
 both are tested against.
@@ -195,7 +196,7 @@ _PY_WHITESPACE = "".join(chr(c) for c in range(0x3001) if chr(c).isspace())
 # boolean LUT over the same range for code-point-side .strip() parity
 # (0x3000 IDEOGRAPHIC SPACE is Unicode's highest whitespace codepoint,
 # so clamping larger codepoints to index 0 — NUL, not whitespace — is
-# exact); used by the batched column-span trim in _emit_cols
+# exact); used by the batched column-span trim in _emit_regions
 _WS_LUT = np.zeros(0x3001, dtype=bool)
 _WS_LUT[[ord(c) for c in _PY_WHITESPACE]] = True
 
@@ -290,9 +291,9 @@ _Batch = namedtuple(
     " is_banner is_footer is_fence cls_a cls_b"
     # _page_stage: per page; per line; per region
     " offsets ratio used_b page active cls band starts counts r_page reg_label"
-    # _emit_stage: [(page id per span, span frame)], the §6/§6d block
-    # gutters by first line, the §6p page columns by page
-    " parts gutter_cache page_cols",
+    # _emit_stage: (page id per span, span frame) or None, the §6/§6d
+    # block gutters by first line, the §6p page columns by page
+    " spans gutter_cache page_cols",
     defaults=(None,) * 14,
 )
 
@@ -317,7 +318,7 @@ def analyze_turns_batch(
                 "text": pd.Series([], dtype="object"),
             }
         )
-    return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+    return frames[0]
 
 
 def page_diags_batch(
@@ -330,13 +331,11 @@ def page_diags_batch(
 def analyze_turns_frames(
     pdf: pd.DataFrame, model: LineModel | None = None
 ) -> list[pd.DataFrame]:
-    """Iterator-friendly form of ``analyze_turns_batch``: returns the
-    column-free and column-page frames as a LIST (0-2 entries) instead of
-    concatenating them — mapInPandas yields each directly, skipping
-    the pandas block consolidation that concat forces. Row order
-    across the frames is NOT part of the contract (extract.py imposes
-    the conversation windows downstream)."""
-    return [f for _p, f in _emit_stage(_page_stage(_line_stage(pdf, model))).parts]
+    """Iterator-friendly form of ``analyze_turns_batch``: the batch's
+    span frame as a list of at most one entry (none when no span
+    survives), which mapInPandas yields directly."""
+    spans = _emit_stage(_page_stage(_line_stage(pdf, model))).spans
+    return [] if spans is None else [spans[1]]
 
 
 def _line_stage(pdf: pd.DataFrame, model: LineModel | None) -> _Batch:
@@ -574,51 +573,29 @@ def _page_stage(b: _Batch) -> _Batch:
 
 def _emit_stage(b: _Batch) -> _Batch:
     """SPEC §§6-10, one array engine: every text block gets its §6/§6d
-    gutters in batched grids (_block_gutters). Pages without column
-    structure — and tool pages, one pseudo-region of all nonblank
-    lines — emit through _emit_fast; column pages (block gutters or
-    §6p page columns) through _emit_cols; both finish in _emit_core."""
-    n_per, tool_page, page, starts, r_page, band = (
-        b.n_per, b.tool_page, b.page, b.starts, b.r_page, b.band
-    )
-    parts = []
-    page_cols: dict[int, tuple] = {}
+    gutters in batched grids (_block_gutters), pages with guttered
+    blocks their §6p page columns (_page_gutters), and one region
+    table for every page (_emit_regions) finishes in _emit_core."""
+    page, band = b.page, b.band
     gutter_cache = _block_gutters(b)
-    complex_page = np.zeros(len(n_per), dtype=bool)
+    complex_page = np.zeros(len(b.n_per), dtype=bool)
     complex_page[page[np.fromiter(gutter_cache, np.int64, len(gutter_cache))]] = True
-    rmask = ~complex_page[r_page] & ~tool_page[r_page]
-    tp = np.flatnonzero(tool_page & (n_per > 0))
-    fr_start = np.concatenate([starts[rmask], b.offsets[tp]])
-    if len(fr_start):
-        parts.append(
-            _emit_fast(
-                b,
-                fr_start,
-                np.concatenate([b.counts[rmask], n_per[tp]]),
-                np.concatenate([b.reg_label[rmask], np.full(len(tp), C_TOOL, np.int8)]),
-                np.concatenate([band[starts][rmask], np.zeros(len(tp), np.int64)]),
-                np.concatenate([r_page[rmask], tp]),
-            )
-        )
-    cplx = np.flatnonzero(complex_page)
-    if len(cplx):
-        page_cols = _page_gutters(b, complex_page)
-        # §6p band recompute: on a page-column page a separator whose
-        # ink sits inside ONE column (mother/child containment,
-        # utils/__init__.py:213-297) no longer advances the band
-        # counter for the later lines of its page
-        if page_cols:
-            band = band.copy()
-            sep = np.flatnonzero(b.active & (b.cls == C_SEP))
-            sep = sep[np.isin(page[sep], np.fromiter(page_cols, np.int64, len(page_cols)))]
-            for i in sep.tolist():
-                ends = page_cols[int(page[i])][2]
-                a = b.lstr_len[i]
-                if np.searchsorted(ends, a) == np.searchsorted(ends, a + b.s_len[i] - 1):
-                    band[i + 1 : b.offsets[page[i] + 1]] -= 1
-        parts.append(_emit_cols(b, cplx, band, gutter_cache, page_cols))
+    page_cols = _page_gutters(b, complex_page)
+    # §6p band recompute: on a page-column page a separator whose
+    # ink sits inside ONE column (mother/child containment,
+    # utils/__init__.py:213-297) no longer advances the band
+    # counter for the later lines of its page
+    if page_cols:
+        band = band.copy()
+        sep = np.flatnonzero(b.active & (b.cls == C_SEP))
+        sep = sep[np.isin(page[sep], np.fromiter(page_cols, np.int64, len(page_cols)))]
+        for i in sep.tolist():
+            ends = page_cols[int(page[i])][2]
+            a = b.lstr_len[i]
+            if np.searchsorted(ends, a) == np.searchsorted(ends, a + b.s_len[i] - 1):
+                band[i + 1 : b.offsets[page[i] + 1]] -= 1
     return b._replace(
-        parts=[p for p in parts if p is not None],
+        spans=_emit_regions(b, band, gutter_cache, page_cols),
         gutter_cache=gutter_cache,
         page_cols=page_cols,
     )
@@ -634,8 +611,9 @@ def _diag_stage(b: _Batch) -> pd.DataFrame:
     )
     n_spans = np.zeros(P, dtype=np.int64)
     n_regions = np.zeros(P, dtype=np.int64)
-    for sp_page, f in b.parts:
-        n_spans += np.bincount(sp_page, minlength=P)
+    if b.spans is not None:
+        sp_page, f = b.spans
+        n_spans = np.bincount(sp_page, minlength=P)
         np.maximum.at(n_regions, sp_page, f["region_seq"].to_numpy() + 1)
     max_cols = np.ones(P, dtype=np.int64)
     for st, (_sh, _pr, g) in gutter_cache.items():
@@ -1107,127 +1085,103 @@ def _emit_core(lb, pg, bd, rl, cs, ce, texts, spn_len, cola, colb, pdf, cfg):
     )
 
 
-def _emit_fast(b: _Batch, fr_start, fr_count, fr_label, fr_band, fr_page):
-    """Array-native span emission for column-free regions: sort regions
-    by (page, band, type-group, first_line), derive one span per
-    non-blank line, hand off to the shared ``_emit_core`` engine."""
-    order = np.lexsort((fr_start, _TG_LUT[fr_label], fr_band, fr_page))
-    st = fr_start[order].astype(np.int64)
-    cn = fr_count[order].astype(np.int64)
-    pg = fr_page[order].astype(np.int64)
-    bd = fr_band[order].astype(np.int64)
-    lb = fr_label[order]
+def _emit_regions(b: _Batch, band, gutter_cache, page_cols):
+    """Array-native region table and span emission for every page of
+    the batch (SPEC §6 column split, §6p page columns, §6m marginalia,
+    §§7-10).
 
-    total = int(cn.sum())
-    if total == 0:
-        return None
-    reg_first = np.cumsum(cn) - cn
-    line_ids = np.repeat(st - reg_first, cn) + np.arange(total, dtype=np.int64)
-    reg_of_line = np.repeat(np.arange(len(st), dtype=np.int64), cn)
-    keep = b.s_len[line_ids] > 0
-    li = line_ids[keep]
-    rl = reg_of_line[keep]
-    if len(li) == 0:
-        return None
-    lead = b.lstr_len[li]
-    cs = b.line_start[li] + lead
-    spn = b.s_len[li]
-    return _emit_core(
-        lb, pg, bd, rl,
-        cs, cs + spn, b.stripped_np[li], spn,
-        lead, lead + spn,
-        b.pdf, b.cfg,
-    )
-
-
-def _emit_cols(b: _Batch, pages, band, gutter_cache, page_cols):
-    """Array-native span emission for COLUMN pages (SPEC §6 column
-    split, §6p page columns, §6m marginalia, §§7-10).
-
-    On a §6p page-column page (``page_cols``) every text region splits
-    by the page gutters at the page width, every other region takes
-    the column holding its first line's first ink, and regions order
-    column-major across bands; elsewhere a text region splits by its
-    own block gutters. Guttered text regions expand into per-column
-    sub-regions; the column piece trim runs as ONE batched searchsorted
-    over the lines' non-whitespace coordinates (exact ``str.strip()``
-    parity via _WS_LUT); plain regions reuse the
-    line-span arrays; everything merges into one region table ordered
-    by (page, band, type-group, first, col) — (page, col, band,
-    type-group, first) on page-column pages — and finishes in the
-    shared ``_emit_core`` engine."""
+    A region is one row (label, band, first line, col, page) unless it
+    is a guttered text region: a text block with its own §6/§6d
+    gutters, or any text region of a §6p page-column page, which
+    splits by the page gutters at the page width. A tool page is one
+    C_TOOL row of all its lines at band 0. col is 0 except on §6p
+    pages, where a one-row region takes the column holding its first
+    line's first ink. Guttered text regions expand into per-column
+    sub-region rows; their column pieces are trimmed by ONE batched
+    searchsorted over the lines' non-whitespace coordinates (exact
+    ``str.strip()`` parity via _WS_LUT). Rows order by (page, band,
+    type-group, first, col) — (page, col, band, type-group, first) on
+    page-column pages — and finish in the shared ``_emit_core``
+    engine."""
     cfg, lines_np, line_start = b.cfg, b.lines_np, b.line_start
     s_len, lstr_len, raw_len = b.s_len, b.lstr_len, b.raw_len
+    starts, counts, r_page, reg_label = b.starts, b.counts, b.r_page, b.reg_label
     K = 1 + int(raw_len.max()) if len(raw_len) else 1
+    pc_page = np.zeros(len(b.n_per), dtype=bool)
+    pc_page[np.fromiter(page_cols, np.int64, len(page_cols))] = True
 
-    # --- region tables: plain regions (one row) vs guttered text ---
-    rg_lab, rg_bd, rg_first, rg_col, rg_pg = [], [], [], [], []
-    a_start, a_count = [], []  # plain regions, parallel to their rows
-    gregs = []  # (start, count, shifts, gutters, w, band, page)
-    r_lo = np.searchsorted(b.starts, b.offsets[pages])
-    r_hi = np.searchsorted(b.starts, b.offsets[pages + 1])
-    for t, r_lo_t, r_hi_t in zip(pages.tolist(), r_lo.tolist(), r_hi.tolist()):
-        pc_ = page_cols.get(t)
-        for r in range(r_lo_t, r_hi_t):
-            st_r = int(b.starts[r])
-            cn_r = int(b.counts[r])
-            lab = int(b.reg_label[r])
-            bd_r = int(band[st_r])
-            col = 0
-            if pc_ is not None:
-                if lab == C_TEXT:
-                    gregs.append((st_r, cn_r, None, pc_[1], pc_[0], bd_r, t))
-                    continue
-                col = int(np.searchsorted(pc_[2], lstr_len[st_r]))
-            elif lab == C_TEXT and st_r in gutter_cache:
-                shifts, sh_prof, gutters = gutter_cache[st_r]
-                if shifts is not None:
-                    w = len(sh_prof)
-                else:
-                    w = int(raw_len[st_r : st_r + cn_r].max())
-                gregs.append((st_r, cn_r, shifts, gutters, w, bd_r, t))
-                continue
-            rg_lab.append(lab)
-            rg_bd.append(bd_r)
-            rg_first.append(st_r)
-            rg_col.append(col)
-            rg_pg.append(t)
-            a_start.append(st_r)
-            a_count.append(cn_r)
+    # --- one-row regions, then one C_TOOL row per tool page ---
+    guttered = (reg_label == C_TEXT) & (
+        pc_page[r_page]
+        | np.isin(starts, np.fromiter(gutter_cache, np.int64, len(gutter_cache)))
+    )
+    one = ~guttered
+    tp = np.flatnonzero(b.tool_page & (b.n_per > 0))
+    fi0 = np.concatenate([starts[one], b.offsets[tp]])
+    cn0 = np.concatenate([counts[one], b.n_per[tp]])
+    lb0 = np.concatenate([reg_label[one], np.full(len(tp), C_TOOL, np.int8)])
+    bd0 = np.concatenate([band[starts[one]], np.zeros(len(tp), np.int64)])
+    pg0 = np.concatenate([r_page[one], tp])
+    co0 = np.zeros(len(fi0), dtype=np.int64)
+    n_one = int(one.sum())  # region rows: ascending page
+    for t, (_w, _g, ends) in page_cols.items():
+        lo, hi = np.searchsorted(pg0[:n_one], [t, t + 1])
+        co0[lo:hi] = np.searchsorted(ends, lstr_len[fi0[lo:hi]])
 
-    # --- guttered regions: batched column piece extraction ---------------
-    pair_meta = []  # per (region, col): (greg_ord, col, a, b)
-    if gregs:
-        g_start = np.asarray([g[0] for g in gregs], dtype=np.int64)
-        g_count = np.asarray([g[1] for g in gregs], dtype=np.int64)
+    # --- guttered text regions: batched column piece extraction ---------
+    z = np.zeros(0, dtype=np.int64)
+    spB = csB = ceB = lenB = colaB = colbB = pair_row = z
+    textsB = np.zeros(0, dtype=object)
+    gi = np.flatnonzero(guttered)
+    if len(gi):
+        g_start = starts[gi]
+        g_count = counts[gi]
+        g_page = r_page[gi]
         g_lineoff = np.cumsum(g_count) - g_count
         Lg = int(g_count.sum())
         li_g = np.repeat(g_start - g_lineoff, g_count) + np.arange(
             Lg, dtype=np.int64
         )
+        # split width: the page width on §6p pages, the sheared profile
+        # width on deskewed blocks, else the block's widest line
+        g_w = np.maximum.reduceat(raw_len[li_g], g_lineoff)
         shift_flat = np.zeros(Lg, dtype=np.int64)
-        for go, (st_r, cn_r, shifts, _g, _w, _b, _t) in enumerate(gregs):
+        g_gut = []
+        for go, (st_r, t) in enumerate(zip(g_start.tolist(), g_page.tolist())):
+            pc_ = page_cols.get(t)
+            if pc_ is not None:
+                g_w[go] = pc_[0]
+                g_gut.append(pc_[1])
+                continue
+            shifts, sh_prof, gutters = gutter_cache[st_r]
             if shifts is not None:
+                g_w[go] = len(sh_prof)
                 off = int(g_lineoff[go])
-                shift_flat[off : off + cn_r] = np.asarray(shifts, dtype=np.int64)
+                shift_flat[off : off + len(shifts)] = shifts
+            g_gut.append(gutters)
         # non-whitespace coordinates (line-major => sorted keys)
         rows_nw, cols_nw = _char_cells(lines_np[li_g], raw_len[li_g], _is_text)
         flat_keys = rows_nw * K + cols_nw
-        # (region, col) pairs, col-ascending per region
-        for go, (_st, _cn, _sh, gutters, w, _b, _t) in enumerate(gregs):
-            prev = 0
-            for g0, g1 in gutters:
-                pair_meta.append((go, len(pair_meta), prev, g0))
-                prev = g1 + 1
-            pair_meta.append((go, len(pair_meta), prev, w))
-        pr_greg = np.asarray([p[0] for p in pair_meta], dtype=np.int64)
-        pr_a = np.asarray([p[2] for p in pair_meta], dtype=np.int64)
-        pr_b = np.asarray([p[3] for p in pair_meta], dtype=np.int64)
+        # (region, col) pairs, col-ascending per region: column c runs
+        # from the end of gutter c-1 to the start of gutter c, the last
+        # column to the split width
+        n_gut = np.fromiter(map(len, g_gut), np.int64, len(g_gut))
+        gut = np.asarray([g for gs in g_gut for g in gs], dtype=np.int64).reshape(-1, 2)
+        n_pair = n_gut + 1
+        pr_greg = np.repeat(np.arange(len(gi), dtype=np.int64), n_pair)
+        pr_col = np.arange(int(n_pair.sum()), dtype=np.int64) - np.repeat(
+            np.cumsum(n_pair) - n_pair, n_pair
+        )
+        gk = np.repeat(np.cumsum(n_gut) - n_gut, n_pair) + pr_col
+        pr_a = np.where(pr_col > 0, gut[gk - 1, 1] + 1, 0)
+        pr_b = np.where(
+            pr_col < n_gut[pr_greg], gut[np.minimum(gk, len(gut) - 1), 0], g_w[pr_greg]
+        )
         # (pair, line) triples: window searchsorted over the flat keys
         tri_cnt = g_count[pr_greg]
         tri_first = np.cumsum(tri_cnt) - tri_cnt
         n_tri = int(tri_cnt.sum())
-        tri_pair = np.repeat(np.arange(len(pair_meta), dtype=np.int64), tri_cnt)
+        tri_pair = np.repeat(np.arange(len(pr_greg), dtype=np.int64), tri_cnt)
         tri_line = (
             np.repeat(g_lineoff[pr_greg] - tri_first, tri_cnt)
             + np.arange(n_tri, dtype=np.int64)
@@ -1260,95 +1214,69 @@ def _emit_cols(b: _Batch, pages, band, gutter_cache, page_cols):
         for x, i in enumerate(gl.tolist()):
             textsB[x] = lines_np[i][e0[x] : e1[x]]
         spB = tri_pair[has]
-        pair_nspan = np.bincount(spB, minlength=len(pair_meta))
-        pair_maxlen = np.zeros(len(pair_meta), dtype=np.int64)
+        pair_maxlen = np.zeros(len(pr_greg), dtype=np.int64)
         np.maximum.at(pair_maxlen, spB, lenB)
-        # §6m projection marginalia + sub-region rows (non-empty pairs
-        # only: an empty column is no region)
-        rel = round(cfg.marginalia_width_frac * 100)
-        pair_row = np.full(len(pair_meta), -1, dtype=np.int64)
-        p_at = 0
-        for go, (_st, _cn, _sh, gutters, w, bd_r, t) in enumerate(gregs):
-            n_cols = len(gutters) + 1
-            ent = [
-                p_at + c for c in range(n_cols) if pair_nspan[p_at + c] > 0
-            ]
-            n_e = len(ent)
-            for idx, p in enumerate(ent):
-                rt = C_TEXT
-                if n_e >= 2 and (idx == 0 or idx == n_e - 1):
-                    wd = int(pr_b[p] - pr_a[p])
-                    others = max(
-                        int(pr_b[q] - pr_a[q]) for q in ent if q != p
-                    )
-                    if (
-                        wd * 100 <= rel * w
-                        and 2 * wd <= others
-                        and pair_maxlen[p] <= cfg.marginalia_max_len
-                    ):
-                        rt = C_MARG
-                pair_row[p] = len(rg_lab)
-                rg_lab.append(rt)
-                rg_bd.append(bd_r)
-                rg_first.append(int(_st))
-                rg_col.append(int(p - p_at))
-                rg_pg.append(t)
-            p_at += n_cols
+        # sub-region rows: the non-empty pairs (an empty column is no
+        # region), grouped by region; they carry no line count, their
+        # spans are the pieces. §6m projection marginalia: the first or
+        # last of >= 2 columns relabels when it is narrow against the
+        # split width and against the widest OTHER column, and holds
+        # only short pieces. A column at most half the widest one is
+        # never the widest itself, so the region's widest column
+        # stands in for the widest other one
+        ep = np.flatnonzero(np.bincount(spB, minlength=len(pr_greg)) > 0)
+        eg = pr_greg[ep]
+        wd = (pr_b - pr_a)[ep]
+        gs = np.flatnonzero(np.diff(eg, prepend=-1))  # each region's first
+        n_e = np.diff(np.append(gs, len(ep)))
+        grp = np.repeat(np.arange(len(gs)), n_e)
+        rank = np.arange(len(ep)) - gs[grp]
+        marg = (
+            (n_e[grp] >= 2)
+            & ((rank == 0) | (rank == n_e[grp] - 1))
+            & (wd * 100 <= round(cfg.marginalia_width_frac * 100) * g_w[eg])
+            & (2 * wd <= np.maximum.reduceat(wd, gs)[grp])
+            & (pair_maxlen[ep] <= cfg.marginalia_max_len)
+        )
+        pair_row = np.full(len(pr_greg), -1, dtype=np.int64)
+        pair_row[ep] = len(fi0) + np.arange(len(ep), dtype=np.int64)
+        fi0 = np.concatenate([fi0, g_start[eg]])
+        cn0 = np.concatenate([cn0, np.zeros(len(ep), dtype=np.int64)])
+        lb0 = np.concatenate([lb0, np.where(marg, C_MARG, C_TEXT).astype(np.int8)])
+        bd0 = np.concatenate([bd0, band[g_start[eg]]])
+        pg0 = np.concatenate([pg0, g_page[eg]])
+        co0 = np.concatenate([co0, pr_col[ep]])
 
-    if not rg_lab:
-        return None
-    lb0 = np.asarray(rg_lab, dtype=np.int8)
-    bd0 = np.asarray(rg_bd, dtype=np.int64)
-    fi0 = np.asarray(rg_first, dtype=np.int64)
-    co0 = np.asarray(rg_col, dtype=np.int64)
-    pg0 = np.asarray(rg_pg, dtype=np.int64)
     # §7 reading order; §7p: page-column pages lead with the column
     # (column-major ACROSS bands)
-    pm = np.isin(pg0, np.fromiter(page_cols, np.int64, len(page_cols)))
-    order = np.lexsort((co0, fi0, _TG_LUT[lb0], bd0, np.where(pm, co0, 0), pg0))
-    new_of_old = np.empty(len(rg_lab), dtype=np.int64)
-    new_of_old[order] = np.arange(len(rg_lab), dtype=np.int64)
+    order = np.lexsort((co0, fi0, _TG_LUT[lb0], bd0, np.where(pc_page[pg0], co0, 0), pg0))
+    new_of_old = np.empty(len(order), dtype=np.int64)
+    new_of_old[order] = np.arange(len(order), dtype=np.int64)
 
-    # span table (construction order), then ONE stable argsort groups
-    # spans under their ordered region — no per-region Python loop.
-    # Plain-region line spans via the same repeat trick as _emit_fast:
-    if a_start:
-        stA = np.asarray(a_start, dtype=np.int64)
-        cnA = np.asarray(a_count, dtype=np.int64)
-        regfA = np.cumsum(cnA) - cnA
-        totA = int(cnA.sum())
-        lidA = np.repeat(stA - regfA, cnA) + np.arange(totA, dtype=np.int64)
-        rowA = np.repeat(np.arange(len(stA), dtype=np.int64), cnA)
-        keepA = s_len[lidA] > 0
-        ids = lidA[keepA]
-        rlA = new_of_old[rowA[keepA]]  # plain rows are ids 0..nA-1
-        c0 = line_start[ids] + lstr_len[ids]
-        lnA = s_len[ids]
-        csA_, ceA_, txA_ = c0, c0 + lnA, b.stripped_np[ids]
-        caA_, cbA_ = lstr_len[ids], lstr_len[ids] + lnA
-    else:
-        z = np.zeros(0, dtype=np.int64)
-        rlA = csA_ = ceA_ = lnA = caA_ = cbA_ = z
-        txA_ = np.zeros(0, dtype=object)
-    if gregs and len(spB):
-        rlB = new_of_old[pair_row[spB]]
-        sp_rl = np.concatenate([rlA, rlB])
-        sp_cs = np.concatenate([csA_, csB])
-        sp_ce = np.concatenate([ceA_, ceB])
-        sp_tx = np.concatenate([txA_, textsB])
-        sp_ln = np.concatenate([lnA, lenB])
-        sp_ca = np.concatenate([caA_, colaB])
-        sp_cb = np.concatenate([cbA_, colbB])
-    else:
-        sp_rl, sp_cs, sp_ce, sp_tx = rlA, csA_, ceA_, txA_
-        sp_ln, sp_ca, sp_cb = lnA, caA_, cbA_
-    if len(sp_rl) == 0:
-        return None
+    # one-row regions: one span per non-blank line, derived in reading
+    # order by the repeat trick; the column pieces join by ONE stable
+    # argsort on their region — no per-region Python loop
+    st = fi0[order]
+    cn = cn0[order]
+    reg_first = np.cumsum(cn) - cn
+    lid = np.repeat(st - reg_first, cn) + np.arange(int(cn.sum()), dtype=np.int64)
+    rowA = np.repeat(np.arange(len(order), dtype=np.int64), cn)
+    keepA = s_len[lid] > 0
+    ids = lid[keepA]
+    lnA = s_len[ids]
+    lead = lstr_len[ids]
+    c0 = line_start[ids] + lead
+    sp_rl = np.concatenate([rowA[keepA], new_of_old[pair_row[spB]]])
     sorder = np.argsort(sp_rl, kind="stable")
     return _emit_core(
         lb0[order], pg0[order], bd0[order],
-        sp_rl[sorder], sp_cs[sorder].copy(), sp_ce[sorder].copy(),
-        sp_tx[sorder], sp_ln[sorder].copy(), sp_ca[sorder], sp_cb[sorder],
+        sp_rl[sorder],
+        np.concatenate([c0, csB])[sorder],
+        np.concatenate([c0 + lnA, ceB])[sorder],
+        np.concatenate([b.stripped_np[ids], textsB])[sorder],
+        np.concatenate([lnA, lenB])[sorder],
+        np.concatenate([lead, colaB])[sorder],
+        np.concatenate([lead + lnA, colbB])[sorder],
         b.pdf, cfg,
     )
 

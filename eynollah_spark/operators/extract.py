@@ -137,8 +137,8 @@ def _kernel_iter(bc_cfg, metrics=None):
 
         model = _cached_model(key, bc_cfg)
         for pdf in batches:
-            # column-free and column-page frames yield separately (no
-            # pandas concat/consolidation); downstream windows impose order
+            # one span frame per batch (none when no span survives),
+            # yielded as is; downstream windows impose order
             frames = analyze_turns_frames(pdf, model)
             if metrics is not None:
                 metrics["turns_in"].add(len(pdf))

@@ -18,6 +18,7 @@ from eynollah_spark.kernel.textpage import (
     C_TEXT,
     LineModel,
     analyze_turns_batch,
+    analyze_turns_frames,
     page_diags_batch,
 )
 from eynollah_spark.oracle.reference import analyze_turn_naive, page_diag_naive
@@ -401,6 +402,16 @@ def test_contained_separator_does_not_split_bands():
     assert texts_x == (
         ["aaaaaaaaaa"] * 3 + ["-" * 23] + ["cccccccccc"] * 3
         + ["bbbbbbbbbb"] * 3 + ["dddddddddd"] * 3
+    )
+
+    # a separator inside the RIGHT column belongs to column 1: it
+    # follows that column's text, not column 0's
+    right = "\n".join(b1 + [" " * 13 + "-" * 10] + b2)
+    got_r = _kernel_spans([(right, "user")])[0]
+    assert got_r == _oracle_spans(right, "user")
+    assert [g[5] for g in got_r] == (
+        ["aaaaaaaaaa"] * 3 + ["cccccccccc"] * 3
+        + ["bbbbbbbbbb"] * 3 + ["dddddddddd"] * 3 + ["-" * 10]
     )
 
 
@@ -1035,11 +1046,13 @@ def _batch_matches_oracle(texts, cfg, roles=None):
 
 
 @pytest.mark.parametrize("seed", [7, 41, 113, 227])
-def test_emit_cols_matches_per_page_walk(seed):
+def test_emit_regions_matches_per_page_walk(seed):
     """The array engine must match the oracle's per-page walk
     (analyze_turn_naive / page_diag_naive) on randomized multi-column
     corpora: gutter splits, sheared blocks, marginalia relabels,
-    dropcaps, fragments and the empty-column edge."""
+    dropcaps, fragments and the empty-column edge, with column-free,
+    column and tool pages (~1 in 8) in ONE region table, which leaves
+    the kernel as one frame."""
     import numpy as np
 
     from eynollah_spark.config import ExtractConfig
@@ -1072,8 +1085,13 @@ def test_emit_cols_matches_per_page_walk(seed):
                 line = "---"
             lines.append(line)
         texts.append("\n".join(lines))
+    roles = ["tool" if r < 0.125 else "user" for r in rng.random(len(texts))]
     for cfg in (ExtractConfig(), ExtractConfig(small_fragment_max_len=0)):
-        _batch_matches_oracle(texts, cfg)
+        _batch_matches_oracle(texts, cfg, roles)
+        pdf = pd.DataFrame(
+            {"conv_id": "c", "turn_idx": range(len(texts)), "role": roles, "text": texts}
+        )
+        assert len(analyze_turns_frames(pdf, LineModel(cfg))) == 1
 
 
 # ---------------------------------------------------------------------------

@@ -30,14 +30,14 @@ def test_resume_no_dupes_no_loss(spark, tmp_path):
     # restart: only pending turns reach the kernel
     pending = filter_pending_turns(turns, sink)
     assert pending.count() < turns.count()
-    rest = sink.resume(extract_spans(pending))
+    rest = sink.write(extract_spans(pending))
     assert set(rest) == {3, 4, 5, 6, 7}
 
     got = _sorted(sink.read(spark).toPandas())
     pd.testing.assert_frame_equal(got, full)
 
     # idempotence: resuming a complete run writes nothing
-    assert sink.resume(spans) == []
+    assert sink.write(spans) == []
 
     # single-job layout: one hive-partitioned write, not one
     # directory-per-bucket job sequence
@@ -164,7 +164,7 @@ def test_iceberg_span_sink_commit_semantics(spark, tmp_path):
     committed = sink.write(df)
     assert sorted(committed) == [0, 1, 2, 3]
     assert sink.write(df) == []  # all buckets committed -> no-op
-    assert sink.read().count() == 20
+    assert sink.read(spark).count() == 20
 
 
 def test_extract_job_run(spark, tmp_path):
